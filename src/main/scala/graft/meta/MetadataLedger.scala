@@ -1,7 +1,12 @@
 package graft.meta
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import java.sql.Timestamp
+import java.time.Instant
+import java.time.temporal.ChronoUnit
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Schemas
@@ -12,11 +17,12 @@ import graft.sources.ParquetLake
   *
   * The reference gets PK semantics for free from DuckDB
   * (`INSERT OR REPLACE`, reference metadata.py:3-9, silver.py:57-60); on
-  * plain Parquet we compose it from built-ins: union → row_number window
-  * keeping the newest `processed_at` per key → atomic swap of the table
-  * directory. The ledger is partition-granularity metadata, so it stays
-  * small (one row per (layer,city,date)) no matter how large the data lake
-  * grows — driver-side collection of it is safe even at 100 TB data scale.
+  * plain Parquet the upsert reads the ledger, merges on the driver keeping
+  * the newest `processed_at` per key, and swaps in the result as one file.
+  * The ledger is partition-granularity metadata, so it stays small (one row
+  * per (layer,city,date)) no matter how large the data lake grows —
+  * driver-side collection of it is safe even at 100 TB data scale, and is
+  * what the incremental diff ([[processed]]) and the merge both do.
   */
 object MetadataLedger {
 
@@ -50,9 +56,10 @@ object MetadataLedger {
 
   /** PK-replace upsert: `entries` must have columns (layer, city, date);
     * `processed_at` is stamped here (reference silver.py:59 CURRENT_TIMESTAMP).
+    * Per key the newest `processed_at` wins, and an incoming row wins a tie.
     *
     * SINGLE-WRITER BY CONTRACT, and loud about it: the upsert is
-    * read-snapshot → union → atomic swap, so two writers racing would
+    * read-snapshot → merge → atomic swap, so two writers racing would
     * both read the old snapshot and the last swap would silently drop
     * the first writer's rows — the lost-update anomaly a plain-Parquet
     * ledger invites. A `<path>._lock` lease (atomic create-exclusive,
@@ -63,7 +70,34 @@ object MetadataLedger {
     * is a SIBLING of the table root — a lease inside it would vanish
     * with the directory swap. */
   def upsert(spark: SparkSession, path: String, entries: DataFrame,
-             staleLockMs: Long = 10 * 60 * 1000L): Unit = {
+             staleLockMs: Long = 10 * 60 * 1000L): Unit =
+    withLease(spark, path, staleLockMs) {
+      merge(spark, path, entries.select("layer", "city", "date").collect().toSeq)
+    }
+
+  /** The (layer, city, date) entries of driver-side (city, date) keys, for
+    * [[upsert]]: a local relation, so collecting it runs no Spark job. */
+  def entries(spark: SparkSession, layer: String, partitions: Seq[Row]): DataFrame =
+    spark.createDataFrame(partitions.asJava, Schemas.partition).withColumn("layer", lit(layer))
+
+  /** Read-merge-swap under the lease: `entries` are (layer, city, date) rows. */
+  private def merge(spark: SparkSession, path: String, entries: Seq[Row]): Unit = {
+    val now = Timestamp.from(Instant.now().truncatedTo(ChronoUnit.MICROS))
+    // by processed_at; a null stamp is the oldest
+    val age = Ordering.by((r: Row) => Option(r.getTimestamp(3)).map(t => (t.getTime, t.getNanos)))
+    // the current rows first, so an incoming row replaces an equal stamp
+    val rows = read(spark, path).collect().iterator ++
+      entries.iterator.map(e => Row(e.get(0), e.get(1), e.get(2), now))
+    val merged = rows.foldLeft(Map.empty[Row, Row]) { (acc, r) =>
+      val key = Row(r.get(0), r.get(1), r.get(2))
+      if (acc.get(key).exists(age.lt(r, _))) acc else acc.updated(key, r)
+    }
+    ParquetLake.atomicReplace(spark,
+      spark.createDataFrame(merged.values.toSeq.asJava, Schemas.metadata).coalesce(1), path)
+  }
+
+  /** Runs `body` holding the ledger's `<path>._lock` lease. */
+  private def withLease(spark: SparkSession, path: String, staleLockMs: Long)(body: => Unit): Unit = {
     val hfs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lock = new org.apache.hadoop.fs.Path(path + "._lock")
@@ -156,22 +190,8 @@ object MetadataLedger {
           " rows. Retry after the holder finishes, or raise staleLockMs" +
           " breakage only for crashed holders.")
     }
-    try {
-      val stamped = entries
-        .select(col("layer"), col("city"), col("date"))
-        .withColumn("processed_at", current_timestamp())
-      // tiebreak on a marker so the incoming row wins an equal-timestamp race
-      val w = Window.partitionBy("layer", "city", "date")
-        .orderBy(col("processed_at").desc, col("_incoming").desc)
-      val merged = read(spark, path).withColumn("_incoming", lit(0))
-        .unionByName(stamped.withColumn("_incoming", lit(1)))
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .drop("_rn", "_incoming")
-      // the union reads the current ledger, so materialize before the swap
-      val snapshot = merged.localCheckpoint(true)
-      ParquetLake.atomicReplace(spark, snapshot, path)
-    } finally {
+    try body
+    finally {
       // Release ONLY our own lease: if this upsert outlived staleLockMs a
       // breaker may have replaced the lock with its fresh lease — deleting
       // that would re-open the lost-update window for a THIRD writer.
@@ -179,14 +199,8 @@ object MetadataLedger {
     }
   }
 
-  /** Partitions already processed for a layer, as a (city, date) DataFrame
-    * (reference silver.py:15-20). */
-  def processed(spark: SparkSession, path: String, layer: String): DataFrame =
-    read(spark, path).filter(col("layer") === layer).select("city", "date")
-
-  /** The incremental core: partitions present in the source layer but not
-    * yet in the ledger — a true distributed anti-join standing in for the
-    * reference's driver-side set difference (silver.py:69, gold.py:118). */
-  def pendingPartitions(available: DataFrame, processed: DataFrame): DataFrame =
-    available.join(broadcast(processed), Seq("city", "date"), "left_anti")
+  /** Partitions already processed for a layer, as driver-side (city, date)
+    * rows (reference silver.py:15-20). */
+  def processed(spark: SparkSession, path: String, layer: String): Set[Row] =
+    read(spark, path).filter(col("layer") === layer).select("city", "date").collect().toSet
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{blocking, Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.util.control.NonFatal
 
@@ -73,12 +73,15 @@ object Ingestion {
   }
 
   /** Fan out over all cities concurrently; any final failure aborts the
-    * batch. Returns (cityName, rawJson) pairs. */
+    * batch. Returns (cityName, rawJson) pairs. The fetches and retry sleeps
+    * block their thread, so they run inside `blocking`: the global pool
+    * then adds threads instead of capping the fan-out at one fetch per
+    * core. */
   def fetchAll(cities: Seq[City], fetcher: Fetcher, attempts: Int = 3,
                sleepMs: Long => Long = a => (1L << a) * 1000): Seq[(String, String)] = {
     implicit val ec: ExecutionContext = ExecutionContext.global
     val fs = cities.map { c =>
-      Future(c.name -> withRetry(attempts, sleepMs)(fetcher.fetch(c)))
+      Future(blocking(c.name -> withRetry(attempts, sleepMs)(fetcher.fetch(c))))
     }
     Await.result(Future.sequence(fs), 5.minutes)
   }

@@ -1,10 +1,21 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.meta.MetadataLedger
+import graft.sources.ParquetLake
 
 /** Shared machinery for incremental layer processing (the reference's
   * enumerate → diff → process loop, silver.py:65-74 / gold.py:104-125).
+  *
+  * Enumeration and diff run on the driver: the source layer's
+  * `city=<c>/date=<d>` leaf directories come from [[ParquetLake.partitionDirs]]
+  * (plain directory listings, no Spark job), and the ledger's processed
+  * (city, date) keys are collected and subtracted as a set — the
+  * reference's own driver-side set difference (silver.py:69, gold.py:118).
+  * Both sides are partition-granular, so they stay small however many rows
+  * the lake holds. Only the pending leaf directories are then read.
   *
   * Deliberate departure from the reference, noted in BASELINE.md: instead of
   * one engine invocation per pending partition (pathological in Spark — a
@@ -15,30 +26,34 @@ import org.apache.spark.sql.functions._
   */
 object Layers {
 
-  /** Partition enumeration: DISTINCT on the two Hive partition columns.
-    * Catalyst prunes the scan to metadata-only columns, so this reads no
-    * data pages — the Spark analog of the reference's
-    * `SELECT DISTINCT city, date FROM read_parquet(...)` (silver.py:9-12). */
-  def availablePartitions(df: DataFrame): DataFrame =
-    df.select("city", "date").distinct()
+  /** The leaf directories of the layer table at `root` whose (city, date)
+    * the ledger has not recorded for `layer` — every one of them on a
+    * `fullRefresh`. Keys are compared null-safely, so a
+    * `__HIVE_DEFAULT_PARTITION__` directory is pending until its null key is
+    * recorded. A missing `root` throws `FileNotFoundException`. */
+  def pendingDirs(spark: SparkSession, root: String, metadataPath: String, layer: String,
+                  fullRefresh: Boolean = false): Seq[ParquetLake.PartitionDir] = {
+    val dirs = ParquetLake.partitionDirs(spark, root, Schemas.partition)
+    if (fullRefresh || dirs.isEmpty) dirs
+    else {
+      val done = MetadataLedger.processed(spark, metadataPath, layer)
+      dirs.filterNot(d => done.contains(d.values))
+    }
+  }
 
-  /** Scope `df` to the pending partitions — delegates to the generic,
-    * null-safe [[graft.sources.PartitionScope]] (the partition columns are
-    * whatever columns `pending` carries). */
-  def scopeToPending(df: DataFrame, pending: DataFrame,
-                     literalThreshold: Int = 256): DataFrame =
-    graft.sources.PartitionScope.scopeTo(df, pending, literalThreshold)
-
-  /** Empty-partition guard (reference silver.py:42-47 / gold.py:46-51
-    * ValueError on COUNT(*)==0): every pending partition must have produced
-    * at least one row. Runs as one aggregate job over the cached batch. */
-  def requireAllNonEmpty(processedRows: DataFrame, pending: DataFrame): Unit = {
-    val produced = processedRows.groupBy("city", "date").count()
-    val missing = pending.join(produced, Seq("city", "date"), "left_anti").collect()
+  private def failMissing(missing: Seq[Row]): Unit =
     if (missing.nonEmpty) {
       val desc = missing.map(r => s"${r.get(0)}/${r.get(1)}").mkString(", ")
       throw new IllegalStateException(s"empty partitions after transform: $desc")
     }
+
+  /** Empty-partition guard (reference silver.py:42-47 / gold.py:46-51
+    * ValueError on COUNT(*)==0): every pending (city, date) key must have
+    * produced at least one row. Runs as one aggregate job over the batch,
+    * so callers cache the batch first. */
+  def requireAllNonEmpty(processedRows: DataFrame, pending: Seq[Row]): Unit = {
+    val produced = processedRows.select("city", "date").distinct().collect().toSet
+    failMissing(pending.filterNot(produced.contains))
   }
 
   /** ZERO-EXTRA-SCAN variant of [[requireAllNonEmpty]] for the 100 TB
@@ -48,8 +63,7 @@ object Layers {
     * `Observation`, so the TERMINAL ACTION ITSELF — the partition
     * write — collects the per-partition presence as it streams rows
     * through its tasks; `collect_set` over the two partition columns is
-    * bounded by the pending-partition count, the same driver-side size
-    * [[requireAllNonEmpty]] already collects.
+    * bounded by the pending-partition count, the size of `pending` itself.
     *
     * Contract: run the returned `validate` thunk AFTER the terminal
     * action on the INSTRUMENTED frame (it blocks on the observation and
@@ -59,21 +73,13 @@ object Layers {
     * failed batch overwrites the same partitions, so the late failure
     * costs a rerun, never correctness. */
   def requireAllNonEmptyObserved(processedRows: DataFrame,
-                                 pending: DataFrame): (DataFrame, () => Unit) = {
+                                 pending: Seq[Row]): (DataFrame, () => Unit) = {
     val obs = org.apache.spark.sql.Observation()
     val instrumented = processedRows.observe(obs,
       collect_set(struct(col("city"), col("date"))).as("parts"))
     val validate = () => {
-      val parts = obs.get("parts")
-        .asInstanceOf[scala.collection.Seq[org.apache.spark.sql.Row]]
-        .map(r => (r.get(0), r.get(1))).toSet
-      val missing = pending.select("city", "date").collect()
-        .filterNot(r => parts.contains((r.get(0), r.get(1))))
-      if (missing.nonEmpty) {
-        val desc = missing.map(r => s"${r.get(0)}/${r.get(1)}").mkString(", ")
-        throw new IllegalStateException(
-          s"empty partitions after transform: $desc")
-      }
+      val parts = obs.get("parts").asInstanceOf[scala.collection.Seq[Row]].toSet
+      failMissing(pending.filterNot(parts.contains))
     }
     (instrumented, validate)
   }

@@ -22,12 +22,14 @@ object Schemas {
     StructField("weather_code", LongType)
   ))
 
+  /** The Hive partition columns every layer is laid out by. */
+  val partition: StructType = StructType(Seq(
+    StructField("city", StringType),
+    StructField("date", DateType)
+  ))
+
   /** Bronze as read back with partition discovery. */
-  val bronze: StructType = StructType(
-    bronzePayload.fields ++ Seq(
-      StructField("city", StringType),
-      StructField("date", DateType)
-    ))
+  val bronze: StructType = StructType(bronzePayload.fields ++ partition.fields)
 
   /** The Open-Meteo-shaped ingestion document: only the `current` object is
     * consumed (reference bronze.py:15). */

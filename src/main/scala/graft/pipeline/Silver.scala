@@ -38,38 +38,39 @@ object Silver {
   /** Incremental run: process bronze partitions not yet in the ledger.
     * Returns the number of partitions processed.
     *
+    * The pending (city, date) directories come from the driver-side catalog
+    * ([[Layers.pendingDirs]]); only those are read, with the declared bronze
+    * schema.
+    *
     * `observedValidation` (default ON — the 100 TB path) validates the
     * empty-partition guard via [[Layers.requireAllNonEmptyObserved]]: the
     * partition WRITE itself collects per-partition presence, zero extra
-    * scans. Validation then lands after the write; dynamic partition
-    * overwrite makes the rerun-on-failure overwrite the same partitions, so
-    * the late failure costs a rerun, never correctness (and the ledger is
-    * only stamped after validation passes). Set it false for the
-    * reference's validate-before-write order at the price of a re-scan. */
+    * scans, so the batch is not cached. Validation then lands after the
+    * write; dynamic partition overwrite makes the rerun-on-failure overwrite
+    * the same partitions, so the late failure costs a rerun, never
+    * correctness (and the ledger is only stamped after validation passes).
+    * Set it false for the reference's validate-before-write order at the
+    * price of caching and re-scanning the batch. */
   def run(spark: SparkSession, bronzeRoot: String, silverRoot: String,
           metadataPath: String, observedValidation: Boolean = true): Long = {
-    val bronze = ParquetLake.read(spark, bronzeRoot) // missing bronze → fatal, like the reference
-    val pending = MetadataLedger.pendingPartitions(
-      Layers.availablePartitions(bronze),
-      MetadataLedger.processed(spark, metadataPath, layerName)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nPending = pending.count()
-      if (nPending == 0) return 0L
-      val batch = transform(Layers.scopeToPending(bronze, pending))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    // a missing bronze root fails the listing: fatal, like the reference
+    val pending = Layers.pendingDirs(spark, bronzeRoot, metadataPath, layerName)
+    if (pending.isEmpty) return 0L
+    val keys = pending.map(_.values)
+    val batch = transform(
+      ParquetLake.readPartitions(spark, bronzeRoot, Schemas.bronze, pending.map(_.path)))
+    if (observedValidation) {
+      val (instrumented, validate) = Layers.requireAllNonEmptyObserved(batch, keys)
+      ParquetLake.overwritePartitions(instrumented, silverRoot, Seq("city", "date"))
+      validate() // throws before the ledger is stamped
+    } else {
+      val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
       try {
-        if (observedValidation) {
-          val (instrumented, validate) = Layers.requireAllNonEmptyObserved(batch, pending)
-          ParquetLake.overwritePartitions(instrumented, silverRoot, Seq("city", "date"))
-          validate() // throws before the ledger is stamped
-        } else {
-          Layers.requireAllNonEmpty(batch, pending)
-          ParquetLake.overwritePartitions(batch, silverRoot, Seq("city", "date"))
-        }
-        MetadataLedger.upsert(spark, metadataPath, pending.withColumn("layer", lit(layerName)))
-        nPending
-      } finally batch.unpersist()
-    } finally pending.unpersist()
+        Layers.requireAllNonEmpty(cached, keys)
+        ParquetLake.overwritePartitions(cached, silverRoot, Seq("city", "date"))
+      } finally cached.unpersist()
+    }
+    MetadataLedger.upsert(spark, metadataPath, MetadataLedger.entries(spark, layerName, keys))
+    pending.size.toLong
   }
 }

@@ -1,7 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.types.StructType
 
 /** Partitioned-Parquet lake primitives.
@@ -27,6 +30,60 @@ object ParquetLake {
   def read(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(root)
 
+  /** One leaf directory of a Hive-partitioned table: its partition values in
+    * partition-schema order, typed as `collect` returns them (null for
+    * `__HIVE_DEFAULT_PARTITION__`), and its path. */
+  final case class PartitionDir(values: Row, path: String)
+
+  /** Driver-side partition catalog: the `col=value` leaf directories under
+    * `root`, one directory level per field of `partitionSchema`, found with
+    * plain `listStatus` calls. A Spark read of the root lists the same tree
+    * with a distributed job per directory holding more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) children;
+    * this runs no job at all.
+    *
+    * Skips `_`/`.`-prefixed entries (in-flight `_temporary` output,
+    * checksums, markers) and leaves that hold no data file, as Spark's file
+    * index does. Names are unescaped and values cast the way Spark's
+    * partition discovery does, so `values` equal the partition columns Spark
+    * reads back. A missing root throws `FileNotFoundException`. */
+  def partitionDirs(spark: SparkSession, root: String,
+                    partitionSchema: StructType): Seq[PartitionDir] = {
+    val hfs = fs(spark, root)
+    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+    def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
+    def value(level: Int, raw: String): Any =
+      if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+      else {
+        val dt = partitionSchema(level).dataType
+        CatalystTypeConverters.convertToScala(Cast(Literal(raw), dt, tz).eval(), dt)
+      }
+    def walk(dir: Path, level: Int, values: List[Any]): Seq[PartitionDir] = {
+      val children = hfs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath))
+      if (level == partitionSchema.length) {
+        if (children.exists(_.isFile)) Seq(PartitionDir(Row.fromSeq(values.reverse), dir.toString))
+        else Nil
+      } else children.filter(_.isDirectory).flatMap { s =>
+        val name = s.getPath.getName
+        val eq = name.indexOf('=')
+        val field = partitionSchema(level).name
+        require(eq > 0 && ExternalCatalogUtils.unescapePathName(name.take(eq)) == field,
+          s"unexpected directory ${s.getPath} in table $root: expected $field=<value>")
+        walk(s.getPath, level + 1,
+          value(level, ExternalCatalogUtils.unescapePathName(name.drop(eq + 1))) :: values)
+      }
+    }
+    walk(hfs.makeQualified(new Path(root)), 0, Nil)
+  }
+
+  /** Read only the given leaf directories of a partitioned table (paths from
+    * [[partitionDirs]]), with a declared schema: no footer is read for
+    * schema inference, and `basePath` keeps the partition columns. */
+  def readPartitions(spark: SparkSession, root: String, schema: StructType,
+                     dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).option("basePath", root).parquet(dirs: _*)
+
   /** Missing-input-tolerant read: absent path → empty DataFrame with the
     * given schema (the reference's gold layer catches IOException and
     * returns an empty set, gold.py:26-28; we expose the tolerant form and
@@ -36,9 +93,13 @@ object ParquetLake {
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Overwrite only the partitions present in `df`, leaving siblings
-    * untouched (DuckDB `OVERWRITE TRUE` per-partition COPY semantics). */
-  def overwritePartitions(df: DataFrame, root: String, partitionCols: Seq[String]): Unit =
+    * untouched (DuckDB `OVERWRITE TRUE` per-partition COPY semantics).
+    * `options` go to the writer (and through it to the Parquet writer's
+    * Hadoop configuration). */
+  def overwritePartitions(df: DataFrame, root: String, partitionCols: Seq[String],
+                          options: Map[String, String] = Map.empty): Unit =
     df.write
+      .options(options)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .mode("overwrite")

@@ -37,16 +37,6 @@ class MetadataLedgerSpec extends SparkFunSuite {
     assert(!t2.before(t1), "replacement must carry the newer processed_at")
   }
 
-  test("pendingPartitions = available minus processed (anti-join)") {
-    val avail = Seq(("Delhi", Date.valueOf("2026-02-13")), ("London", Date.valueOf("2026-02-13")),
-      ("Delhi", Date.valueOf("2026-02-14"))).toDF("city", "date")
-    val done = Seq(("Delhi", Date.valueOf("2026-02-13"))).toDF("city", "date")
-    val pending = MetadataLedger.pendingPartitions(avail, done)
-      .orderBy("city", "date").collect()
-    assert(pending.map(r => (r.getString(0), r.getDate(1).toString)).toSeq ==
-      Seq(("Delhi", "2026-02-14"), ("London", "2026-02-13")))
-  }
-
   test("concurrent upsert fails loudly while the lease is held; stale lease breaks") {
     val p = tmpDir("mllock") + "/meta"
     MetadataLedger.ensure(spark, p)

@@ -48,6 +48,23 @@ class IngestionSpec extends AnyFunSuite {
     assert(out.keySet == Set("Delhi", "London", "NewYork", "Tokyo"))
   }
 
+  test("fetchAll runs blocking fetches all at once, not one per core") {
+    val n = 32
+    val (inflight, peak) = (new AtomicInteger(0), new AtomicInteger(0))
+    val fetcher = new Fetcher {
+      def fetch(c: City): String = {
+        peak.accumulateAndGet(inflight.incrementAndGet(), math.max)
+        try { Thread.sleep(100); "{}" } finally inflight.decrementAndGet()
+      }
+    }
+    val cities = (1 to n).map(i => City(s"C$i", 0.0, 0.0))
+    val t0 = System.nanoTime()
+    assert(fetchAll(cities, fetcher, sleepMs = noSleep).size == n)
+    val ms = (System.nanoTime() - t0) / 1000000
+    assert(ms < 1000, s"$n 100 ms fetches took $ms ms")
+    assert(peak.get == n, s"at most ${peak.get} of $n fetches were in flight at once")
+  }
+
   test("one city failing all retries aborts the whole batch (asyncio.gather semantics)") {
     val fetcher = new Fetcher {
       def fetch(c: City): String =

@@ -1,55 +1,104 @@
 package graft.pipeline
 
 import java.sql.Date
-import org.apache.spark.sql.functions._
+import java.time.LocalDate
+import org.apache.spark.sql.Row
 
 import graft.SparkFunSuite
+import graft.meta.MetadataLedger
 import graft.pipeline.WeatherFixtures._
+import graft.sources.ParquetLake
 
 class LayersSpec extends SparkFunSuite {
-  import spark.implicits._
 
-  test("scopeToPending literal regime prunes to exactly the pending partitions") {
-    val rows = Seq(
-      bronzeRow("Delhi", "2026-02-13"), bronzeRow("London", "2026-02-13"),
-      bronzeRow("Delhi", "2026-02-14"))
-    val df = bronzeDf(spark, rows)
-    val pending = Seq(("Delhi", Date.valueOf("2026-02-14"))).toDF("city", "date")
-    val out = Layers.scopeToPending(df, pending, literalThreshold = 256)
+  private def key(city: String, date: String) = Row(city, Date.valueOf(date))
+
+  private def record(meta: String, layer: String, keys: Seq[Row]): Unit =
+    MetadataLedger.upsert(spark, meta, MetadataLedger.entries(spark, layer, keys))
+
+  private def keysOf(dirs: Seq[ParquetLake.PartitionDir]): Set[Row] = dirs.map(_.values).toSet
+
+  /** A bronze table with one row per (city, date) and a ledger holding `done` for silver. */
+  private def lake(rows: Seq[BronzeRow], done: Seq[Row]): (String, String) = {
+    val root = tmpDir("layers")
+    writeBronze(spark, rows, s"$root/data")
+    MetadataLedger.ensure(spark, s"$root/meta")
+    if (done.nonEmpty) record(s"$root/meta", Silver.layerName, done)
+    (s"$root/data", s"$root/meta")
+  }
+
+  test("pendingDirs = available minus processed (anti-join semantics)") {
+    val (data, meta) = lake(Seq(bronzeRow("Delhi", "2026-02-13"),
+      bronzeRow("London", "2026-02-13"), bronzeRow("Delhi", "2026-02-14")),
+      done = Seq(key("Delhi", "2026-02-13")))
+    // a key recorded for another layer does not count as processed here
+    record(meta, Gold.layerName, Seq(key("London", "2026-02-13")))
+    assert(keysOf(Layers.pendingDirs(spark, data, meta, Silver.layerName)) ==
+      Set(key("Delhi", "2026-02-14"), key("London", "2026-02-13")))
+    assert(keysOf(Layers.pendingDirs(spark, data, meta, Gold.layerName)) ==
+      Set(key("Delhi", "2026-02-13"), key("Delhi", "2026-02-14")))
+    assert(Layers.pendingDirs(spark, data, meta, Silver.layerName, fullRefresh = true).size == 3)
+  }
+
+  test("reading the pending dirs yields exactly the pending partitions") {
+    val (data, meta) = lake(Seq(bronzeRow("Delhi", "2026-02-13"),
+      bronzeRow("London", "2026-02-13"), bronzeRow("Delhi", "2026-02-14")),
+      done = Seq(key("Delhi", "2026-02-13"), key("London", "2026-02-13")))
+    val pending = Layers.pendingDirs(spark, data, meta, Silver.layerName)
+    val out = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending.map(_.path))
     assert(out.select("city", "date").distinct().collect().map(r =>
       (r.getString(0), r.getDate(1).toString)).toSeq == Seq(("Delhi", "2026-02-14")))
   }
 
-  test("scopeToPending semi-join regime (pending set above threshold) gives identical results") {
-    val rows = (1 to 30).map(i => bronzeRow(s"City$i", f"2026-02-${i % 28 + 1}%02d"))
-    val df = bronzeDf(spark, rows)
-    val pendingPairs = rows.take(20).map(r => (r.city, r.date))
-    val pending = pendingPairs.toDF("city", "date")
-    val literal = Layers.scopeToPending(df, pending, literalThreshold = 256)
-      .select("city", "date").collect().map(r => (r.getString(0), r.getDate(1).toString)).toSet
-    val semi = Layers.scopeToPending(df, pending, literalThreshold = 2)
-      .select("city", "date").collect().map(r => (r.getString(0), r.getDate(1).toString)).toSet
-    assert(semi == literal)
-    assert(semi.size == 20)
+  test("a read of >256 pending dirs equals the filtered full read") {
+    val rows = for (c <- 1 to 3; d <- 1 to 100)
+      yield bronzeRow(s"City$c", LocalDate.of(2026, 1, 1).plusDays(d).toString)
+    val done = rows.take(40).map(r => Row(r.city, r.date))
+    val (data, meta) = lake(rows, done)
+    val pending = Layers.pendingDirs(spark, data, meta, Silver.layerName)
+    assert(pending.size == 260)
+    val scoped = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending.map(_.path))
+      .collect().toSet
+    val doneSet = done.toSet
+    val expected = spark.read.schema(Schemas.bronze).parquet(data).collect()
+      .filterNot(r => doneSet.contains(Row(r.getAs[String]("city"), r.getAs[Date]("date")))).toSet
+    assert(scoped == expected)
+    assert(scoped.size == 260)
   }
 
-  test("scopeToPending with empty pending returns no rows") {
-    val df = bronzeDf(spark, Seq(bronzeRow("Delhi", "2026-02-13")))
-    val pending = Seq.empty[(String, Date)].toDF("city", "date")
-    assert(Layers.scopeToPending(df, pending).count() == 0)
+  test("no pending dirs: nothing is read") {
+    val (data, meta) = lake(Seq(bronzeRow("Delhi", "2026-02-13")),
+      done = Seq(key("Delhi", "2026-02-13")))
+    val pending = Layers.pendingDirs(spark, data, meta, Silver.layerName)
+    assert(pending.isEmpty)
+    val out = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending.map(_.path))
+    assert(out.count() == 0 && out.schema == Schemas.bronze)
+  }
+
+  test("a null partition stays pending until its null key is recorded") {
+    val (data, meta) = lake(Seq(bronzeRow(null, "2026-02-13"), bronzeRow("Delhi", "2026-02-13")),
+      done = Seq(key("Delhi", "2026-02-13")))
+    val pending = Layers.pendingDirs(spark, data, meta, Silver.layerName)
+    assert(keysOf(pending) == Set(Row(null, Date.valueOf("2026-02-13"))))
+    val out = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending.map(_.path))
+    assert(out.select("city").collect().toSeq == Seq(Row(null)))
+    record(meta, Silver.layerName, pending.map(_.values))
+    assert(Layers.pendingDirs(spark, data, meta, Silver.layerName).isEmpty)
   }
 
   test("requireAllNonEmpty passes when every pending partition produced rows") {
     val df = bronzeDf(spark, Seq(bronzeRow("Delhi", "2026-02-13")))
-    val pending = Seq(("Delhi", Date.valueOf("2026-02-13"))).toDF("city", "date")
-    Layers.requireAllNonEmpty(df, pending) // must not throw
+    Layers.requireAllNonEmpty(df, Seq(key("Delhi", "2026-02-13"))) // must not throw
+    val e = intercept[IllegalStateException] {
+      Layers.requireAllNonEmpty(df, Seq(key("Delhi", "2026-02-13"), key("Paris", "2026-02-13")))
+    }
+    assert(e.getMessage.contains("Paris"))
   }
 
   test("requireAllNonEmptyObserved: the WRITE job collects the counts; no re-scan") {
     val df = bronzeDf(spark, Seq(bronzeRow("Delhi", "2026-02-13"),
       bronzeRow("London", "2026-02-13")))
-    val pendingOk = Seq(("Delhi", Date.valueOf("2026-02-13")),
-      ("London", Date.valueOf("2026-02-13"))).toDF("city", "date")
+    val pendingOk = Seq(key("Delhi", "2026-02-13"), key("London", "2026-02-13"))
     val out = tmpDir("obs") + "/t"
     val (inst, validate) = Layers.requireAllNonEmptyObserved(df, pendingOk)
     // terminal action on the INSTRUMENTED frame, then validate — the
@@ -60,8 +109,7 @@ class LayersSpec extends SparkFunSuite {
     assert(spark.read.parquet(out).count() == df.count())
     // a pending partition the transform produced NO rows for throws the
     // same loud error — after the action, per the documented trade
-    val pendingMiss = pendingOk.unionByName(
-      Seq(("Paris", Date.valueOf("2026-02-13"))).toDF("city", "date"))
+    val pendingMiss = pendingOk :+ key("Paris", "2026-02-13")
     val (inst2, validate2) = Layers.requireAllNonEmptyObserved(df, pendingMiss)
     inst2.write.mode("overwrite").partitionBy("city", "date")
       .parquet(tmpDir("obs2") + "/t")

@@ -1,0 +1,74 @@
+package graft.pipeline
+
+import java.sql.Date
+import java.time.LocalDate
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.SparkFunSuite
+import graft.meta.MetadataLedger
+import graft.pipeline.WeatherFixtures._
+
+/** Spark jobs one incremental daily cycle launches on a lake past Spark's
+  * 32-path parallel-listing threshold: the partition catalog must keep
+  * listing on the driver and the cycle's job count flat. */
+class PipelineJobsSpec extends SparkFunSuite {
+
+  private val Tag = "graft.test.cycle"
+
+  /** Job descriptions of the jobs `body` submits from this thread. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).foreach {
+          case "body" => seen.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+          case _ => drained.countDown()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(Tag, "body")
+      body
+      // listener events arrive in order: once the marker job is seen, every
+      // job of `body` has been counted
+      sc.setLocalProperty(Tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener did not drain")
+    } finally {
+      sc.setLocalProperty(Tag, null)
+      sc.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq
+  }
+
+  test("daily cycle on 2 cities x 33 dates: no listing job, at most 12 jobs") {
+    val cities = Ingestion.defaultCities.take(2)
+    val days = (0 until 33).map(d => LocalDate.of(2026, 1, 1).plusDays(d))
+    val conf = Pipeline.Config(tmpDir("jobs"), cities, fullRefreshGold = false)
+    writeBronze(spark, for (c <- cities; d <- days) yield bronzeRow(c.name, d.toString),
+      conf.bronzeRoot)
+    MetadataLedger.ensure(spark, conf.metadataPath)
+    assert(Silver.run(spark, conf.bronzeRoot, conf.silverRoot, conf.metadataPath) == 66)
+    assert(Gold.run(spark, conf.silverRoot, conf.goldRoot, conf.metadataPath) == 66)
+
+    val fetcher = new Ingestion.Fetcher {
+      def fetch(city: Ingestion.City): String = apiJson(12.5, time = "2026-02-03T09:30")
+    }
+    var res: Pipeline.RunResult = null
+    val jobs = jobsOf {
+      res = Pipeline.run(spark, conf, fetcher, Date.valueOf(days.last.plusDays(1)))
+    }
+    assert(res == Pipeline.RunResult(2, 2))
+    assert(jobs.count(_.startsWith("Listing leaf files")) == 0, jobs.mkString("\n"))
+    assert(jobs.size <= 12, jobs.mkString("\n"))
+    // the ledger is rewritten as one data file
+    assert(spark.read.parquet(conf.metadataPath).inputFiles.length == 1)
+    assert(MetadataLedger.read(spark, conf.metadataPath).count() == 2 * 2 * 34)
+  }
+}

@@ -49,6 +49,38 @@ class SilverGoldSpec extends SparkFunSuite {
     assert(n == 0)
   }
 
+  test("silver+gold: a null-city partition is processed once, null-safely") {
+    val root = tmpDir("sgnull")
+    writeBronze(spark, Seq(bronzeRow(null, "2026-02-13", temp = 7.0),
+      bronzeRow("Delhi", "2026-02-13", temp = 30.0)), s"$root/data")
+    MetadataLedger.ensure(spark, s"$root/meta")
+    def cycle(): (Long, Long) =
+      (Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta"),
+        Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta"))
+    assert(cycle() == ((2L, 2L)))
+    assert(cycle() == ((0L, 0L)), "the null key must be recorded and diffed null-safely")
+    val gold = spark.read.parquet(s"$root/gold").filter(col("city").isNull).collect()
+    assert(gold.map(_.getAs[Double]("avg_temp")).toSeq == Seq(7.0))
+  }
+
+  test("gold files carry no column statistics") {
+    val root = tmpDir("sgstats")
+    writeBronze(spark, Seq(bronzeRow("Delhi", "2026-02-13")), s"$root/data")
+    MetadataLedger.ensure(spark, s"$root/meta")
+    Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta")
+    Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = spark.read.parquet(s"$root/gold").inputFiles.toSeq
+    assert(files.size == 1)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(files.head), conf))
+    try {
+      val cols = reader.getFooter.getBlocks.get(0).getColumns
+      assert(cols.size == 4)
+      cols.forEach(c => assert(c.getStatistics == null || c.getStatistics.isEmpty, c.getPath))
+    } finally reader.close()
+  }
+
   test("gold aggregate: avg/max/min/count per (city,date)") {
     val df = Silver.transform(bronzeDf(spark, Seq(
       bronzeRow("Delhi", "2026-02-13", hour = 9, temp = 30.0),
