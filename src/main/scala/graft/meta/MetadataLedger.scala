@@ -33,6 +33,10 @@ object MetadataLedger {
     * thread timing. No-op in production. */
   private[meta] var onStaleObservedForTest: () => Unit = () => ()
 
+  /** Age past which a ledger lease is presumed left by a crashed holder and
+    * broken. */
+  private val staleLockMs = 10 * 60 * 1000L
+
   /** Create-if-missing (reference metadata.py:1-10 DDL). */
   def ensure(spark: SparkSession, path: String): Unit =
     if (!ParquetLake.exists(spark, path))
@@ -69,9 +73,8 @@ object MetadataLedger {
     * `staleLockMs` is presumed crashed and broken (one retry). The lock
     * is a SIBLING of the table root — a lease inside it would vanish
     * with the directory swap. */
-  def upsert(spark: SparkSession, path: String, entries: DataFrame,
-             staleLockMs: Long = 10 * 60 * 1000L): Unit =
-    withLease(spark, path, staleLockMs) {
+  def upsert(spark: SparkSession, path: String, entries: DataFrame): Unit =
+    withLease(spark, path) {
       merge(spark, path, entries.select("layer", "city", "date").collect().toSeq)
     }
 
@@ -97,7 +100,7 @@ object MetadataLedger {
   }
 
   /** Runs `body` holding the ledger's `<path>._lock` lease. */
-  private def withLease(spark: SparkSession, path: String, staleLockMs: Long)(body: => Unit): Unit = {
+  private def withLease(spark: SparkSession, path: String)(body: => Unit): Unit = {
     val hfs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lock = new org.apache.hadoop.fs.Path(path + "._lock")
@@ -187,8 +190,7 @@ object MetadataLedger {
         s"ledger $path is locked by a concurrent upsert (lease age ${age}ms" +
           s" <= ${staleLockMs}ms): the read-union-swap upsert is" +
           " single-writer — a second writer would silently drop this one's" +
-          " rows. Retry after the holder finishes, or raise staleLockMs" +
-          " breakage only for crashed holders.")
+          " rows. Retry after the holder finishes.")
     }
     try body
     finally {

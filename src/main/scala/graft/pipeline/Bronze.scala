@@ -56,7 +56,7 @@ object Bronze {
 
   /** Land a batch: append-only, partitioned by (city, date). */
   def write(df: DataFrame, root: String): Unit =
-    ParquetLake.appendPartitions(df, root, Seq("city", "date"))
+    ParquetLake.appendPartitions(df, root, Schemas.partition.fieldNames.toSeq)
 
   def run(spark: SparkSession, raw: Seq[(String, String)], root: String,
           runDate: java.sql.Date): Unit =

@@ -2,9 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.meta.MetadataLedger
 import graft.sources.ParquetLake
 
 /** Aggregation (gold) layer: daily per-city weather statistics.
@@ -21,7 +19,8 @@ import graft.sources.ParquetLake
   *  - a `fullRefresh` switch recomputes every available partition, ignoring
   *    the ledger diff (gold.py:104,113-118; the shipped default, main.py:36);
   *  - an extra aggregate-null guard: any NULL avg_temp aborts the run
-  *    (gold.py:53-59).
+  *    before the ledger is stamped (gold.py:53-59), a check of the
+  *    [[Layers.step]].
   */
 object Gold {
 
@@ -36,29 +35,6 @@ object Gold {
       count(lit(1)).as("record_count")
     )
 
-  /** Aggregate-sanity guard (reference gold.py:53-59). */
-  def requireNoNullAggregates(gold: DataFrame): Unit = {
-    val bad = gold.filter(col("avg_temp").isNull).count()
-    if (bad > 0)
-      throw new IllegalStateException(s"$bad gold partitions produced NULL avg_temp")
-  }
-
-  /** Zero-extra-scan twin of [[requireNoNullAggregates]]: the terminal
-    * action counts NULL avg_temp rows as they stream through the write
-    * (same contract as [[Layers.requireAllNonEmptyObserved]] — run the
-    * thunk after the action on the instrumented frame). */
-  def requireNoNullAggregatesObserved(gold: DataFrame): (DataFrame, () => Unit) = {
-    val obs = org.apache.spark.sql.Observation()
-    val instrumented = gold.observe(obs,
-      count(when(col("avg_temp").isNull, 1)).as("null_avg"))
-    val validate = () => {
-      val bad = obs.get("null_avg").asInstanceOf[Long]
-      if (bad > 0)
-        throw new IllegalStateException(s"$bad gold partitions produced NULL avg_temp")
-    }
-    (instrumented, validate)
-  }
-
   /** Writer options of the gold table. Each gold file holds exactly one
     * row — the group is (city, date), and so is the partition directory —
     * so Parquet's per-column min/max statistics only repeat that row, and
@@ -66,33 +42,12 @@ object Gold {
     * Without them a one-row file is about a quarter smaller. */
   private val writeOptions = Map("parquet.column.statistics.enabled" -> "false")
 
-  /** Incremental (or `fullRefresh`) run over the silver partitions the
-    * driver-side catalog finds ([[Layers.pendingDirs]]); returns the number
-    * of partitions aggregated. Validation modes as in [[Silver.run]]. */
+  /** Incremental (or `fullRefresh`) run of [[Layers.step]] over the silver
+    * partitions; returns the number of partitions aggregated. */
   def run(spark: SparkSession, silverRoot: String, goldRoot: String,
-          metadataPath: String, fullRefresh: Boolean = false,
-          observedValidation: Boolean = true): Long = {
-    if (!ParquetLake.exists(spark, silverRoot)) return 0L // gold.py:26-28
-    val pending = Layers.pendingDirs(spark, silverRoot, metadataPath, layerName, fullRefresh)
-    if (pending.isEmpty) return 0L
-    val keys = pending.map(_.values)
-    val batch = transform(
-      ParquetLake.readPartitions(spark, silverRoot, Schemas.silver, pending.map(_.path)))
-    if (observedValidation) {
-      // Both guards ride the write itself — zero validation re-scans.
-      val (inst1, validateParts) = Layers.requireAllNonEmptyObserved(batch, keys)
-      val (inst2, validateNulls) = requireNoNullAggregatesObserved(inst1)
-      ParquetLake.overwritePartitions(inst2, goldRoot, Seq("city", "date"), writeOptions)
-      validateParts(); validateNulls() // throw before the ledger is stamped
-    } else {
-      val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        Layers.requireAllNonEmpty(cached, keys)
-        requireNoNullAggregates(cached)
-        ParquetLake.overwritePartitions(cached, goldRoot, Seq("city", "date"), writeOptions)
-      } finally cached.unpersist()
-    }
-    MetadataLedger.upsert(spark, metadataPath, MetadataLedger.entries(spark, layerName, keys))
-    pending.size.toLong
-  }
+          metadataPath: String, fullRefresh: Boolean = false): Long =
+    if (!ParquetLake.exists(spark, silverRoot)) 0L // gold.py:26-28
+    else Layers.step(spark, layerName, silverRoot, Schemas.silver, goldRoot, metadataPath,
+      transform, checks = Seq("NULL avg_temp" -> col("avg_temp").isNull),
+      writeOptions = writeOptions, fullRefresh = fullRefresh)
 }

@@ -1,13 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.meta.MetadataLedger
 import graft.sources.ParquetLake
 
-/** Shared machinery for incremental layer processing (the reference's
-  * enumerate → diff → process loop, silver.py:65-74 / gold.py:104-125).
+/** The incremental layer step both silver and gold run (the reference's
+  * enumerate → diff → process → validate → stamp loop, silver.py:65-74 /
+  * gold.py:104-125).
   *
   * Enumeration and diff run on the driver: the source layer's
   * `city=<c>/date=<d>` leaf directories come from [[ParquetLake.partitionDirs]]
@@ -41,46 +43,47 @@ object Layers {
     }
   }
 
-  private def failMissing(missing: Seq[Row]): Unit =
+  /** One incremental run of `layer`: read the source partitions of `srcRoot`
+    * pending for it ([[pendingDirs]]), `transform` them as one batch, write
+    * the result into `dstRoot` by dynamic partition overwrite (with the
+    * writer `writeOptions`), validate, and stamp the pending keys in the
+    * ledger. Returns the number of partitions processed.
+    *
+    * Validation rides the write: one Spark `Observation` on the batch
+    * collects the written (city, date) keys and, per `checks` entry
+    * `(what, bad)`, the number of rows matching `bad`, as the write's own
+    * tasks stream the rows — no cache, no re-scan. Two guards then throw
+    * before the ledger is stamped: a pending partition the transform left
+    * empty (reference silver.py:42-47 / gold.py:46-51), named in the error,
+    * and a check with a non-zero count (`<n> <layer> partitions produced
+    * <what>`, gold.py:53-59). The trade against the reference's
+    * validate-before-write order: a failed batch has already overwritten its
+    * partitions, but it is unstamped, so the rerun after the fix overwrites
+    * the same partitions again — the failure costs a rerun, never
+    * correctness. */
+  def step(spark: SparkSession, layer: String, srcRoot: String, srcSchema: StructType,
+           dstRoot: String, metadataPath: String, transform: DataFrame => DataFrame,
+           checks: Seq[(String, Column)], writeOptions: Map[String, String],
+           fullRefresh: Boolean): Long = {
+    val pending = pendingDirs(spark, srcRoot, metadataPath, layer, fullRefresh)
+    if (pending.isEmpty) return 0L
+    val keys = pending.map(_.values)
+    val partitionCols = Schemas.partition.fieldNames.toSeq
+    val obs = Observation()
+    val batch = transform(ParquetLake.readPartitions(spark, srcRoot, srcSchema, pending.map(_.path)))
+      .observe(obs, collect_set(struct(partitionCols.map(col): _*)).as("parts"),
+        checks.map { case (what, bad) => count(when(bad, 1)).as(what) }: _*)
+    ParquetLake.overwritePartitions(batch, dstRoot, partitionCols, writeOptions)
+    val observed = obs.get
+    val parts = observed("parts").asInstanceOf[scala.collection.Seq[Row]].toSet
+    val missing = keys.filterNot(parts.contains)
     if (missing.nonEmpty) {
       val desc = missing.map(r => s"${r.get(0)}/${r.get(1)}").mkString(", ")
       throw new IllegalStateException(s"empty partitions after transform: $desc")
     }
-
-  /** Empty-partition guard (reference silver.py:42-47 / gold.py:46-51
-    * ValueError on COUNT(*)==0): every pending (city, date) key must have
-    * produced at least one row. Runs as one aggregate job over the batch,
-    * so callers cache the batch first. */
-  def requireAllNonEmpty(processedRows: DataFrame, pending: Seq[Row]): Unit = {
-    val produced = processedRows.select("city", "date").distinct().collect().toSet
-    failMissing(pending.filterNot(produced.contains))
-  }
-
-  /** ZERO-EXTRA-SCAN variant of [[requireAllNonEmpty]] for the 100 TB
-    * regime: the post-hoc aggregate above re-scans the processed batch
-    * (fine while it fits the cache; a terabyte batch spills and the
-    * validation re-scan becomes real IO). This attaches a Spark
-    * `Observation`, so the TERMINAL ACTION ITSELF — the partition
-    * write — collects the per-partition presence as it streams rows
-    * through its tasks; `collect_set` over the two partition columns is
-    * bounded by the pending-partition count, the size of `pending` itself.
-    *
-    * Contract: run the returned `validate` thunk AFTER the terminal
-    * action on the INSTRUMENTED frame (it blocks on the observation and
-    * throws [[requireAllNonEmpty]]'s loud error). The trade, stated:
-    * validation happens after the write where the reference validates
-    * before — pair with DYNAMIC partition overwrite, where rerunning a
-    * failed batch overwrites the same partitions, so the late failure
-    * costs a rerun, never correctness. */
-  def requireAllNonEmptyObserved(processedRows: DataFrame,
-                                 pending: Seq[Row]): (DataFrame, () => Unit) = {
-    val obs = org.apache.spark.sql.Observation()
-    val instrumented = processedRows.observe(obs,
-      collect_set(struct(col("city"), col("date"))).as("parts"))
-    val validate = () => {
-      val parts = obs.get("parts").asInstanceOf[scala.collection.Seq[Row]].toSet
-      failMissing(pending.filterNot(parts.contains))
-    }
-    (instrumented, validate)
+    for ((what, _) <- checks; n = observed(what).asInstanceOf[Long] if n > 0)
+      throw new IllegalStateException(s"$n $layer partitions produced $what")
+    MetadataLedger.upsert(spark, metadataPath, MetadataLedger.entries(spark, layer, keys))
+    pending.size.toLong
   }
 }

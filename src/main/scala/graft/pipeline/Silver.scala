@@ -3,13 +3,10 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
-import org.apache.spark.storage.StorageLevel
 
-import graft.meta.MetadataLedger
-import graft.sources.ParquetLake
-
-/** Cleaning (silver) layer: cast/parse/filter bronze rows, write
-  * partitioned, record progress in the ledger.
+/** Cleaning (silver) layer: cast/parse/filter bronze rows, run through the
+  * incremental [[Layers.step]] (partitioned write, empty-partition guard,
+  * ledger stamp).
   *
   * Column logic mirrors the reference CTAS (silver.py:28-39): rename
   * `*_2m/_10m` metrics, parse `time` with the Java format equivalent of
@@ -35,42 +32,12 @@ object Silver {
         col("weather_code").cast(IntegerType).as("weather_code")
       )
 
-  /** Incremental run: process bronze partitions not yet in the ledger.
-    * Returns the number of partitions processed.
-    *
-    * The pending (city, date) directories come from the driver-side catalog
-    * ([[Layers.pendingDirs]]); only those are read, with the declared bronze
-    * schema.
-    *
-    * `observedValidation` (default ON — the 100 TB path) validates the
-    * empty-partition guard via [[Layers.requireAllNonEmptyObserved]]: the
-    * partition WRITE itself collects per-partition presence, zero extra
-    * scans, so the batch is not cached. Validation then lands after the
-    * write; dynamic partition overwrite makes the rerun-on-failure overwrite
-    * the same partitions, so the late failure costs a rerun, never
-    * correctness (and the ledger is only stamped after validation passes).
-    * Set it false for the reference's validate-before-write order at the
-    * price of caching and re-scanning the batch. */
+  /** Incremental run: process the bronze partitions the ledger has not
+    * recorded for silver ([[Layers.step]]). Returns the number of partitions
+    * processed. */
   def run(spark: SparkSession, bronzeRoot: String, silverRoot: String,
-          metadataPath: String, observedValidation: Boolean = true): Long = {
+          metadataPath: String): Long =
     // a missing bronze root fails the listing: fatal, like the reference
-    val pending = Layers.pendingDirs(spark, bronzeRoot, metadataPath, layerName)
-    if (pending.isEmpty) return 0L
-    val keys = pending.map(_.values)
-    val batch = transform(
-      ParquetLake.readPartitions(spark, bronzeRoot, Schemas.bronze, pending.map(_.path)))
-    if (observedValidation) {
-      val (instrumented, validate) = Layers.requireAllNonEmptyObserved(batch, keys)
-      ParquetLake.overwritePartitions(instrumented, silverRoot, Seq("city", "date"))
-      validate() // throws before the ledger is stamped
-    } else {
-      val cached = batch.persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        Layers.requireAllNonEmpty(cached, keys)
-        ParquetLake.overwritePartitions(cached, silverRoot, Seq("city", "date"))
-      } finally cached.unpersist()
-    }
-    MetadataLedger.upsert(spark, metadataPath, MetadataLedger.entries(spark, layerName, keys))
-    pending.size.toLong
-  }
+    Layers.step(spark, layerName, bronzeRoot, Schemas.bronze, silverRoot, metadataPath,
+      transform, checks = Nil, writeOptions = Map.empty, fullRefresh = false)
 }

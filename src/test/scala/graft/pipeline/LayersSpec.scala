@@ -2,7 +2,8 @@ package graft.pipeline
 
 import java.sql.Date
 import java.time.LocalDate
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
 import graft.SparkFunSuite
 import graft.meta.MetadataLedger
@@ -86,34 +87,39 @@ class LayersSpec extends SparkFunSuite {
     assert(Layers.pendingDirs(spark, data, meta, Silver.layerName).isEmpty)
   }
 
-  test("requireAllNonEmpty passes when every pending partition produced rows") {
-    val df = bronzeDf(spark, Seq(bronzeRow("Delhi", "2026-02-13")))
-    Layers.requireAllNonEmpty(df, Seq(key("Delhi", "2026-02-13"))) // must not throw
+  private def silverStep(data: String, meta: String, out: String,
+                         transform: DataFrame => DataFrame,
+                         checks: Seq[(String, Column)] = Nil): Long =
+    Layers.step(spark, Silver.layerName, data, Schemas.bronze, out, meta, transform,
+      checks = checks, writeOptions = Map.empty, fullRefresh = false)
+
+  test("step: an emptied pending partition is named in the error") {
+    val (data, meta) = lake(Seq(bronzeRow("Delhi", "2026-02-13"),
+      bronzeRow("Paris", "2026-02-13")), done = Nil)
+    val out = tmpDir("step") + "/t"
     val e = intercept[IllegalStateException] {
-      Layers.requireAllNonEmpty(df, Seq(key("Delhi", "2026-02-13"), key("Paris", "2026-02-13")))
+      silverStep(data, meta, out, _.filter(col("city") =!= "Paris"))
     }
-    assert(e.getMessage.contains("Paris"))
+    assert(e.getMessage.contains("Paris") && !e.getMessage.contains("Delhi"), e.getMessage)
+    assert(MetadataLedger.read(spark, meta).count() == 0, "a failed guard stamps nothing")
+    // every pending partition produced rows: written and stamped
+    assert(silverStep(data, meta, out, identity) == 2)
+    assert(keysOf(ParquetLake.partitionDirs(spark, out, Schemas.partition)) ==
+      Set(key("Delhi", "2026-02-13"), key("Paris", "2026-02-13")))
+    assert(Layers.pendingDirs(spark, data, meta, Silver.layerName).isEmpty)
   }
 
-  test("requireAllNonEmptyObserved: the WRITE job collects the counts; no re-scan") {
-    val df = bronzeDf(spark, Seq(bronzeRow("Delhi", "2026-02-13"),
-      bronzeRow("London", "2026-02-13")))
-    val pendingOk = Seq(key("Delhi", "2026-02-13"), key("London", "2026-02-13"))
-    val out = tmpDir("obs") + "/t"
-    val (inst, validate) = Layers.requireAllNonEmptyObserved(df, pendingOk)
-    // terminal action on the INSTRUMENTED frame, then validate — the
-    // observation was collected by the write's own tasks
-    inst.write.mode("overwrite").partitionBy("city", "date").parquet(out)
-    validate() // must not throw
-    // the written table is the plain frame, bit for bit
-    assert(spark.read.parquet(out).count() == df.count())
-    // a pending partition the transform produced NO rows for throws the
-    // same loud error — after the action, per the documented trade
-    val pendingMiss = pendingOk :+ key("Paris", "2026-02-13")
-    val (inst2, validate2) = Layers.requireAllNonEmptyObserved(df, pendingMiss)
-    inst2.write.mode("overwrite").partitionBy("city", "date")
-      .parquet(tmpDir("obs2") + "/t")
-    val e = intercept[IllegalStateException](validate2())
-    assert(e.getMessage.contains("Paris"))
+  test("step: a failed check is counted off the write and stamps nothing") {
+    val (data, meta) = lake(Seq(bronzeRow("Delhi", "2026-02-13", temp = null),
+      bronzeRow("London", "2026-02-13"), bronzeRow("London", "2026-02-13", hour = 10, temp = null)),
+      done = Nil)
+    val out = tmpDir("step") + "/t"
+    val nullTemp = Seq("NULL temperature_2m" -> col("temperature_2m").isNull)
+    val e = intercept[IllegalStateException](silverStep(data, meta, out, identity, nullTemp))
+    assert(e.getMessage.contains("2 silver partitions produced NULL temperature_2m"), e.getMessage)
+    // validation follows the write: the batch is written, but unstamped
+    assert(spark.read.parquet(out).count() == 3)
+    assert(Layers.pendingDirs(spark, data, meta, Silver.layerName).size == 2)
+    assert(silverStep(data, meta, out, identity) == 2, "the rerun processes both partitions")
   }
 }

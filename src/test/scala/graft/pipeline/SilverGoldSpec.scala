@@ -1,11 +1,13 @@
 package graft.pipeline
 
 import java.sql.Date
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
 import graft.meta.MetadataLedger
 import graft.pipeline.WeatherFixtures._
+import graft.sources.ParquetLake
 
 class SilverGoldSpec extends SparkFunSuite {
 
@@ -33,6 +35,28 @@ class SilverGoldSpec extends SparkFunSuite {
       Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta")
     }
     assert(e.getMessage.contains("empty partitions"))
+    assert(MetadataLedger.read(spark, s"$root/meta").count() == 0,
+      "a failed validation must not stamp the ledger, so a fixed rerun reprocesses")
+  }
+
+  // Named for the second validation path it once compared against; with one
+  // path left, the parity checked is between a failed run and its rerun.
+  test("silver: empty-partition guard throw-parity on the legacy path") {
+    val root = tmpDir("sgleg")
+    writeBronze(spark, Seq(bronzeRow("Tokyo", "2026-02-13", temp = null)), s"$root/data")
+    MetadataLedger.ensure(spark, s"$root/meta")
+    def failedRun(): String = intercept[IllegalStateException] {
+      Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta")
+    }.getMessage
+    val first = failedRun()
+    assert(first.contains("empty partitions") && first.contains("Tokyo"), first)
+    assert(MetadataLedger.read(spark, s"$root/meta").count() == 0,
+      "a failed validation must not stamp the ledger")
+    assert(failedRun() == first, "the unstamped partition is retried and fails the same way")
+    // the fixed partition is processed and stamped
+    writeBronze(spark, Seq(bronzeRow("Tokyo", "2026-02-13", temp = 12.0)), s"$root/data")
+    assert(Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta") == 1)
+    assert(MetadataLedger.read(spark, s"$root/meta").count() == 1)
   }
 
   test("silver: missing bronze root is fatal (reference asymmetry, silver.py:8-12)") {
@@ -94,70 +118,70 @@ class SilverGoldSpec extends SparkFunSuite {
     assert(g(0).getAs[Long]("record_count") == 2L)
   }
 
+  private val day = Date.valueOf("2026-02-13")
+
+  /** Silver rows for Delhi (temperature `delhiTemp`) and London (8.0) on `day`. */
+  private def writeSilver(root: String, delhiTemp: java.lang.Double): Unit =
+    ParquetLake.overwritePartitions(spark.createDataFrame(java.util.List.of(
+      Row("Delhi", day, null, delhiTemp, 3.2, 180, 2),
+      Row("London", day, null, 8.0, 3.2, 180, 2)), Schemas.silver),
+      s"$root/silver", Schemas.partition.fieldNames.toSeq)
+
   test("gold: null avg guard fires") {
-    import spark.implicits._
-    val bad = Seq(("Delhi", Date.valueOf("2026-02-13"), null.asInstanceOf[java.lang.Double]))
-      .toDF("city", "date", "avg_temp")
-    val e = intercept[IllegalStateException] { Gold.requireNoNullAggregates(bad) }
-    assert(e.getMessage.contains("NULL avg_temp"))
+    val root = tmpDir("sgnullavg")
+    writeSilver(root, null)
+    MetadataLedger.ensure(spark, s"$root/meta")
+    val e = intercept[IllegalStateException] {
+      Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta")
+    }
+    assert(e.getMessage.contains("1 gold partitions produced NULL avg_temp"))
+    assert(MetadataLedger.read(spark, s"$root/meta").count() == 0,
+      "a failed guard must not stamp the ledger")
+    writeSilver(root, 30.0)
+    assert(Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta") == 2,
+      "the unstamped partitions are processed on the rerun")
+    assert(spark.read.parquet(s"$root/gold").orderBy("city").select("avg_temp").collect()
+      .map(_.getDouble(0)).toSeq == Seq(30.0, 8.0))
   }
 
   test("gold: observed null-avg guard fires off the write action itself") {
-    import spark.implicits._
-    val bad = Seq(
-      ("Delhi", Date.valueOf("2026-02-13"), null.asInstanceOf[java.lang.Double]),
-      ("London", Date.valueOf("2026-02-13"), java.lang.Double.valueOf(8.0)))
-      .toDF("city", "date", "avg_temp")
-    val (inst, validate) = Gold.requireNoNullAggregatesObserved(bad)
-    inst.write.mode("overwrite").parquet(tmpDir("sgobs") + "/out")
-    val e = intercept[IllegalStateException] { validate() }
-    assert(e.getMessage.contains("1 gold partitions produced NULL avg_temp"))
-    // clean frame passes
-    val ok = Seq(("Delhi", Date.valueOf("2026-02-13"), java.lang.Double.valueOf(30.0)))
-      .toDF("city", "date", "avg_temp")
-    val (inst2, validate2) = Gold.requireNoNullAggregatesObserved(ok)
-    inst2.write.mode("overwrite").parquet(tmpDir("sgobs") + "/out2")
-    validate2() // must not throw
-  }
-
-  test("silver+gold: observed and legacy validation paths are write-identical") {
-    val rows = Seq(
-      bronzeRow("Delhi", "2026-02-13", hour = 9, temp = 30.0),
-      bronzeRow("Delhi", "2026-02-13", hour = 10, temp = 34.0),
-      bronzeRow("London", "2026-02-13", hour = 9, temp = 8.0))
-    def runBoth(observed: Boolean): (Seq[String], Seq[String]) = {
-      val root = tmpDir(s"sgpar$observed")
-      writeBronze(spark, rows, s"$root/data")
-      MetadataLedger.ensure(spark, s"$root/meta")
-      val nS = Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta",
-        observedValidation = observed)
-      val nG = Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta",
-        observedValidation = observed)
-      assert(nS == 2 && nG == 2)
-      (spark.read.parquet(s"$root/silver").collect().map(_.toString).sorted.toSeq,
-       spark.read.parquet(s"$root/gold").collect().map(_.toString).sorted.toSeq)
-    }
-    val (sObs, gObs) = runBoth(observed = true)
-    val (sLeg, gLeg) = runBoth(observed = false)
-    assert(sObs == sLeg, "silver rows must not depend on the validation mode")
-    assert(gObs == gLeg, "gold rows must not depend on the validation mode")
-  }
-
-  test("silver: empty-partition guard throw-parity on the legacy path") {
-    val root = tmpDir("sgleg")
-    writeBronze(spark, Seq(bronzeRow("Tokyo", "2026-02-13", temp = null)), s"$root/data")
+    val root = tmpDir("sgobs")
+    writeSilver(root, null)
     MetadataLedger.ensure(spark, s"$root/meta")
     val e = intercept[IllegalStateException] {
-      Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta",
-        observedValidation = false)
+      Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta")
     }
-    assert(e.getMessage.contains("empty partitions"))
-    // and on the observed path the ledger stays unstamped, so a fixed rerun reprocesses
-    val e2 = intercept[IllegalStateException] {
-      Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta")
-    }
-    assert(e2.getMessage.contains("empty partitions"))
-    assert(MetadataLedger.read(spark, s"$root/meta").count() == 0,
-      "a failed validation must not stamp the ledger in either mode")
+    assert(e.getMessage.contains("1 gold partitions produced NULL avg_temp"), e.getMessage)
+    // the count was observed as the write streamed the rows: the failed batch
+    // is already on disk, NULL avg included, and only the ledger stamp is withheld
+    val written = spark.read.parquet(s"$root/gold").orderBy("city")
+      .select("city", "avg_temp").collect().toSeq
+    assert(written == Seq(Row("Delhi", null), Row("London", 8.0)))
+    assert(Layers.pendingDirs(spark, s"$root/silver", s"$root/meta", Gold.layerName).size == 2)
+  }
+
+  test("silver+gold: written rows equal the closed-form expected rows") {
+    val root = tmpDir("sgrows")
+    writeBronze(spark, Seq(
+      bronzeRow("Delhi", "2026-02-13", hour = 9, temp = 30.0),
+      bronzeRow("Delhi", "2026-02-13", hour = 10, temp = 34.0),
+      bronzeRow("London", "2026-02-13", hour = 9, temp = 8.0)), s"$root/data")
+    MetadataLedger.ensure(spark, s"$root/meta")
+    assert(Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta") == 2)
+    assert(Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta") == 2)
+    def at(hour: Int) = java.sql.Timestamp.valueOf(f"2026-02-13 $hour%02d:30:00")
+    val silver = spark.read.parquet(s"$root/silver")
+      .select("city", "date", "timestamp", "temperature", "wind_speed", "wind_direction", "weather_code")
+      .orderBy("city", "timestamp").collect().toSeq
+    assert(silver == Seq(
+      Row("Delhi", day, at(9), 30.0, 3.2, 180, 2),
+      Row("Delhi", day, at(10), 34.0, 3.2, 180, 2),
+      Row("London", day, at(9), 8.0, 3.2, 180, 2)))
+    val gold = spark.read.parquet(s"$root/gold")
+      .select("city", "date", "avg_temp", "max_temp", "min_temp", "record_count")
+      .orderBy("city").collect().toSeq
+    assert(gold == Seq(
+      Row("Delhi", day, 32.0, 34.0, 30.0, 2L),
+      Row("London", day, 8.0, 8.0, 8.0, 1L)))
   }
 }
