@@ -15,9 +15,9 @@ import graft.sources.ParquetLake
   * (crash-safe per-partition rename swap — NOT dynamic partition overwrite,
   * whose delete-then-publish commit can destroy a partition's prior rows
   * mid-crash); untouched partitions are never opened. The merge itself is
-  * the ledger's PK-replace pattern
-  * (union → row_number keeping the preferred row per key) applied to data
-  * tables, generalizing MetadataLedger.upsert.
+  * a PK-replace (union → row_number keeping the preferred row per key), run
+  * as a Spark job because data tables, unlike the partition ledger
+  * (MetadataLedger.upsert, merged on the driver), do not fit on the driver.
   *
   * Constraints, stated plainly: each key must live in exactly one partition
   * (keys moving between partitions need a delete leg — out of scope), and

@@ -14,7 +14,7 @@ import graft.sources.ParquetLake
   * Enumeration and diff run on the driver: the source layer's
   * `city=<c>/date=<d>` leaf directories come from [[ParquetLake.partitionDirs]]
   * (plain directory listings, no Spark job), and the ledger's processed
-  * (city, date) keys are collected and subtracted as a set — the
+  * (city, date) keys are read on the driver and subtracted as a set — the
   * reference's own driver-side set difference (silver.py:69, gold.py:118).
   * Both sides are partition-granular, so they stay small however many rows
   * the lake holds. Only the pending leaf directories are then read.
@@ -27,6 +27,10 @@ import graft.sources.ParquetLake
   * partitions.
   */
 object Layers {
+
+  /** A pending partition the transform left empty (see [[step]]). The
+    * partitions that produced rows are already stamped when it is thrown. */
+  final class EmptyPartitionsException(message: String) extends IllegalStateException(message)
 
   /** The leaf directories of the layer table at `root` whose (city, date)
     * the ledger has not recorded for `layer` — every one of them on a
@@ -47,20 +51,23 @@ object Layers {
     * pending for it ([[pendingDirs]]), `transform` them as one batch, write
     * the result into `dstRoot` by dynamic partition overwrite (with the
     * writer `writeOptions`), validate, and stamp the pending keys in the
-    * ledger. Returns the number of partitions processed.
+    * ledger. Returns the number of partitions processed and stamped.
     *
     * Validation rides the write: one Spark `Observation` on the batch
     * collects the written (city, date) keys and, per `checks` entry
     * `(what, bad)`, the number of rows matching `bad`, as the write's own
-    * tasks stream the rows — no cache, no re-scan. Two guards then throw
-    * before the ledger is stamped: a pending partition the transform left
-    * empty (reference silver.py:42-47 / gold.py:46-51), named in the error,
-    * and a check with a non-zero count (`<n> <layer> partitions produced
-    * <what>`, gold.py:53-59). The trade against the reference's
-    * validate-before-write order: a failed batch has already overwritten its
-    * partitions, but it is unstamped, so the rerun after the fix overwrites
-    * the same partitions again — the failure costs a rerun, never
-    * correctness. */
+    * tasks stream the rows — no cache, no re-scan. A check with a non-zero
+    * count (`<n> <layer> partitions produced <what>`, gold.py:53-59) throws
+    * before anything is stamped. Otherwise the pending partitions that
+    * produced rows are stamped, and a pending partition the transform left
+    * empty (reference silver.py:42-47 / gold.py:46-51) is then named in an
+    * [[EmptyPartitionsException]] (`empty partitions after transform: …`)
+    * and stays pending: like the reference's per-partition loop
+    * (silver.py:73-74), one bad partition does not hold back the others.
+    * The trade against the reference's validate-before-write order: a
+    * failed batch has already overwritten its partitions, but what failed is
+    * unstamped, so the rerun after the fix overwrites the same partitions
+    * again — the failure costs a rerun, never correctness. */
   def step(spark: SparkSession, layer: String, srcRoot: String, srcSchema: StructType,
            dstRoot: String, metadataPath: String, transform: DataFrame => DataFrame,
            checks: Seq[(String, Column)], writeOptions: Map[String, String],
@@ -75,15 +82,15 @@ object Layers {
         checks.map { case (what, bad) => count(when(bad, 1)).as(what) }: _*)
     ParquetLake.overwritePartitions(batch, dstRoot, partitionCols, writeOptions)
     val observed = obs.get
-    val parts = observed("parts").asInstanceOf[scala.collection.Seq[Row]].toSet
-    val missing = keys.filterNot(parts.contains)
-    if (missing.nonEmpty) {
-      val desc = missing.map(r => s"${r.get(0)}/${r.get(1)}").mkString(", ")
-      throw new IllegalStateException(s"empty partitions after transform: $desc")
-    }
     for ((what, _) <- checks; n = observed(what).asInstanceOf[Long] if n > 0)
       throw new IllegalStateException(s"$n $layer partitions produced $what")
-    MetadataLedger.upsert(spark, metadataPath, MetadataLedger.entries(spark, layer, keys))
-    pending.size.toLong
+    val parts = observed("parts").asInstanceOf[scala.collection.Seq[Row]].toSet
+    val (done, missing) = keys.partition(parts.contains)
+    MetadataLedger.upsert(spark, metadataPath, layer, done)
+    if (missing.nonEmpty) {
+      val desc = missing.map(r => s"${r.get(0)}/${r.get(1)}").mkString(", ")
+      throw new EmptyPartitionsException(s"empty partitions after transform: $desc")
+    }
+    done.size.toLong
   }
 }

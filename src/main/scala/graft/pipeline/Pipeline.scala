@@ -1,11 +1,17 @@
 package graft.pipeline
 
+import scala.util.Try
+
 import org.apache.spark.sql.SparkSession
 
 import graft.meta.MetadataLedger
 
 /** End-to-end orchestrator mirroring the reference's main.py:27-36 order:
   * metadata init → ingestion → bronze landing → silver → gold(fullRefresh).
+  * A silver partition the transform left empty does not hold back gold for
+  * the others: gold still runs, then silver's error is rethrown. Any other
+  * silver failure stops the run before gold, so gold never runs ahead of
+  * silver's stamped state.
   */
 object Pipeline {
 
@@ -29,9 +35,14 @@ object Pipeline {
     MetadataLedger.ensure(spark, conf.metadataPath)
     val raw = Ingestion.fetchAll(conf.cities, fetcher)
     Bronze.run(spark, raw, conf.bronzeRoot, runDate)
-    val s = Silver.run(spark, conf.bronzeRoot, conf.silverRoot, conf.metadataPath)
-    val g = Gold.run(spark, conf.silverRoot, conf.goldRoot, conf.metadataPath,
+    def gold() = Gold.run(spark, conf.silverRoot, conf.goldRoot, conf.metadataPath,
       fullRefresh = conf.fullRefreshGold)
-    RunResult(s, g)
+    val s = try Silver.run(spark, conf.bronzeRoot, conf.silverRoot, conf.metadataPath)
+    catch {
+      case e: Layers.EmptyPartitionsException =>
+        Try(gold()).failed.foreach(e.addSuppressed)
+        throw e
+    }
+    RunResult(s, gold())
   }
 }

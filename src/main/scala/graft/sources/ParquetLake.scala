@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.StructType
   */
 object ParquetLake {
 
-  private def fs(spark: SparkSession, path: String) =
+  private[graft] def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def exists(spark: SparkSession, path: String): Boolean =
@@ -236,16 +236,18 @@ object ParquetLake {
     (before, scan()._1)
   }
 
-  /** Full-table atomic replace via write-temp-then-swap. Used for the small
-    * metadata ledger where a plain read-modify-write could expose a
-    * half-written table to concurrent readers (SURVEY §7.4 item 2).
+  /** Full-table atomic replace via write-temp-then-swap, for whole-table
+    * rewrites (unpartitioned compaction and staged overwrite, the IVF index)
+    * where a plain read-modify-write could expose a half-written table to
+    * concurrent readers (SURVEY §7.4 item 2).
     *
     * The new content is materialized under `<root>.staging-<nanos>`, the old
     * root is renamed aside, the staging dir renamed in, and the old data
     * deleted. Renames are atomic per filesystem (HDFS/posix), so readers
     * never see HALF-written data — but there is a sub-millisecond window
-    * between the two renames where the path does not exist at all; callers
-    * that treat missing-as-empty must retry (MetadataLedger.read does).
+    * between the two renames where the path does not exist at all, and a
+    * crash in it leaves the table only under `<root>.old-<nanos>`; a caller
+    * must not read a missing root as an empty table.
     * On object stores a table format would be the real answer — out of
     * scope here.
     */

@@ -1,137 +1,155 @@
 package graft.meta
 
-import java.sql.Date
-import org.apache.spark.sql.functions._
+import java.io.File
+import java.sql.{Date, Timestamp}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch}
+
+import org.apache.spark.sql.Row
 
 import graft.SparkFunSuite
+import graft.pipeline.Schemas
 
 class MetadataLedgerSpec extends SparkFunSuite {
-  import spark.implicits._
 
-  private def entries(rows: (String, String, String)*) =
-    rows.map { case (l, c, d) => (l, c, Date.valueOf(d)) }
-      .toDF("layer", "city", "date")
+  private def key(city: String, date: String) =
+    Row(city, Option(date).map(Date.valueOf).orNull)
+
+  private def cities(p: String): Seq[String] =
+    MetadataLedger.read(spark, p).map(_.getString(1)).sorted
+
+  /** The ledger's visible data files. */
+  private def visible(p: String): Seq[File] =
+    new File(p).listFiles.toSeq.filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+
+  /** Runs `body` with `hook` as the ledger's step hook. */
+  private def withHook[T](hook: String => Unit)(body: => T): T = {
+    MetadataLedger.onStepForTest = hook
+    try body finally MetadataLedger.onStepForTest = _ => ()
+  }
+
+  private def crashAt(step: String): String => Unit =
+    s => if (s == step) throw new IllegalStateException(s"crash at $s")
 
   test("ensure is idempotent and creates an empty ledger") {
     val p = tmpDir("ml") + "/meta"
+    assert(MetadataLedger.read(spark, p).isEmpty, "a missing ledger is empty")
     MetadataLedger.ensure(spark, p)
     MetadataLedger.ensure(spark, p)
-    val df = MetadataLedger.read(spark, p)
-    assert(df.count() == 0)
-    assert(df.schema.fieldNames.toSeq == Seq("layer", "city", "date", "processed_at"))
+    assert(new File(p).isDirectory && visible(p).isEmpty)
+    assert(MetadataLedger.read(spark, p).isEmpty)
   }
 
   test("upsert keeps exactly one row per (layer, city, date), newest wins") {
     val p = tmpDir("ml") + "/meta"
     MetadataLedger.ensure(spark, p)
-    MetadataLedger.upsert(spark, p, entries(("silver", "Delhi", "2026-02-13")))
-    val t1 = MetadataLedger.read(spark, p)
-      .filter($"city" === "Delhi").head.getAs[java.sql.Timestamp]("processed_at")
-    Thread.sleep(5)
-    MetadataLedger.upsert(spark, p, entries(
-      ("silver", "Delhi", "2026-02-13"), // replaces
-      ("silver", "London", "2026-02-13"))) // new
-    val df = MetadataLedger.read(spark, p)
-    assert(df.count() == 2)
-    val t2 = df.filter($"city" === "Delhi").head.getAs[java.sql.Timestamp]("processed_at")
+    MetadataLedger.upsert(spark, p, "silver", Seq(key("Delhi", "2026-02-13")))
+    val t1 = MetadataLedger.read(spark, p).head.getTimestamp(3)
+    MetadataLedger.upsert(spark, p, "silver", Seq(
+      key("Delhi", "2026-02-13"), // replaces
+      key("London", "2026-02-13"))) // new
+    val rows = MetadataLedger.read(spark, p)
+    assert(rows.size == 2 && cities(p) == Seq("Delhi", "London"))
+    val t2 = rows.find(_.getString(1) == "Delhi").get.getTimestamp(3)
     assert(!t2.before(t1), "replacement must carry the newer processed_at")
+    assert(visible(p).size == 1, "each upsert leaves one data file")
   }
 
-  test("concurrent upsert fails loudly while the lease is held; stale lease breaks") {
-    val p = tmpDir("mllock") + "/meta"
-    MetadataLedger.ensure(spark, p)
-    // simulate a concurrent writer mid-upsert: its lease file exists
-    val lock = new java.io.File(p + "._lock")
-    assert(lock.createNewFile())
+  test("merge: the newest processed_at wins, a null stamp is the oldest") {
+    val (t1, t2) = (Timestamp.valueOf("2026-02-13 09:00:00"), Timestamp.valueOf("2026-02-13 10:00:00"))
+    def row(city: String, t: Timestamp, layer: String = "silver") = Row(layer, city, null, t)
+    val merged = MetadataLedger.merge(
+      Seq(row("Delhi", t2), row("London", t1), row("Rome", null), row("Oslo", t1)),
+      Seq(row("Delhi", t1), row("London", t2), row("Rome", t1), row("Oslo", t1, "gold")))
+    assert(merged.toSet == Set(row("Delhi", t2), row("London", t2), row("Rome", t1),
+      row("Oslo", t1), row("Oslo", t1, "gold")), "the layer is part of the key")
+  }
+
+  test("the ledger reads back through Spark as Schemas.metadata, null keys included") {
+    val p = tmpDir("ml") + "/meta"
+    val keys = Seq(key("Delhi", "2026-02-13"), key(null, "2026-02-13"), key("Delhi", null))
+    MetadataLedger.upsert(spark, p, "gold", keys)
+    val viaSpark = spark.read.parquet(p)
+    assert(viaSpark.schema == Schemas.metadata)
+    assert(viaSpark.collect().toSet == MetadataLedger.read(spark, p).toSet)
+    assert(MetadataLedger.processed(spark, p, "gold") == keys.toSet)
+    assert(MetadataLedger.processed(spark, p, "silver").isEmpty)
+  }
+
+  test("a ledger file written by Spark itself is read and folded in") {
+    val p = tmpDir("ml") + "/meta"
+    val stamp = Timestamp.valueOf("2026-02-13 09:30:00.123456")
+    spark.createDataFrame(java.util.List.of(Row("silver", "Delhi", Date.valueOf("2026-02-13"), stamp)),
+      Schemas.metadata).coalesce(1).write.parquet(p)
+    assert(MetadataLedger.read(spark, p) == Seq(Row("silver", "Delhi", Date.valueOf("2026-02-13"), stamp)))
+    MetadataLedger.upsert(spark, p, "silver", Seq(key("London", "2026-02-13")))
+    assert(cities(p) == Seq("Delhi", "London") && visible(p).size == 1)
+  }
+
+  test("crash before the rename: the stray hidden file is ignored") {
+    val p = tmpDir("mlcrash") + "/meta"
+    MetadataLedger.upsert(spark, p, "silver", Seq(key("Delhi", "2026-02-13")))
     val e = intercept[IllegalStateException] {
-      MetadataLedger.upsert(spark, p, entries(("silver", "Delhi", "2026-02-13")))
+      withHook(crashAt("written"))(MetadataLedger.upsert(spark, p, "silver", Seq(key("London", "2026-02-13"))))
     }
-    assert(e.getMessage.contains("locked by a concurrent upsert"))
-    assert(MetadataLedger.read(spark, p).count() == 0,
-      "the blocked writer must not have touched the ledger")
-    // a crashed holder's stale lease is broken and the upsert proceeds
-    assert(lock.setLastModified(System.currentTimeMillis() - 3600 * 1000L))
-    MetadataLedger.upsert(spark, p, entries(("silver", "Delhi", "2026-02-13")))
-    assert(MetadataLedger.read(spark, p).count() == 1)
-    assert(!lock.exists(), "lease must be released after the swap")
-    // the lease also releases on failure inside the upsert body
-    intercept[Exception] {
-      MetadataLedger.upsert(spark, p,
-        Seq(1).toDF("not_the_schema")) // analysis error mid-body
-    }
-    assert(!lock.exists(), "lease must be released on upsert failure")
-    MetadataLedger.upsert(spark, p, entries(("gold", "Delhi", "2026-02-13")))
-    assert(MetadataLedger.read(spark, p).count() == 2)
+    assert(e.getMessage == "crash at written")
+    assert(new File(p).list().exists(_.startsWith("_part-")), "the crashed write is left hidden")
+    assert(cities(p) == Seq("Delhi"))
+    assert(spark.read.parquet(p).count() == 1, "Spark ignores the hidden file too")
+    MetadataLedger.upsert(spark, p, "silver", Seq(key("Paris", "2026-02-13")))
+    assert(cities(p) == Seq("Delhi", "Paris") && visible(p).size == 1)
   }
 
-  test("two writers racing to break the same stale lease: no lost update") {
-    // The break is an atomic rename of the observed lease, so of two
-    // simultaneous breakers exactly one wins the rename; the loser fails
-    // loudly instead of deleting the winner's fresh lease. The anomaly this
-    // pins: with a blind delete-then-create break, BOTH writers proceed and
-    // the later swap silently drops the earlier writer's rows.
-    (1 to 3).foreach { round =>
+  test("crash before the delete: two visible files merge, and the next upsert leaves one") {
+    val p = tmpDir("mlcrash") + "/meta"
+    MetadataLedger.upsert(spark, p, "silver", Seq(key("Delhi", "2026-02-13")))
+    intercept[IllegalStateException] {
+      withHook(crashAt("published"))(MetadataLedger.upsert(spark, p, "silver",
+        Seq(key("Delhi", "2026-02-13"), key("London", "2026-02-13"))))
+    }
+    assert(visible(p).size == 2, "the merged-from file outlives the crash")
+    assert(cities(p) == Seq("Delhi", "London"), "one row per key across both files")
+    assert(spark.read.parquet(p).count() == 3, "a Spark reader sees Delhi once per file until the next upsert")
+    MetadataLedger.upsert(spark, p, "silver", Seq(key("Paris", "2026-02-13")))
+    assert(visible(p).size == 1)
+    assert(cities(p) == Seq("Delhi", "London", "Paris"))
+    assert(spark.read.parquet(p).count() == 3)
+  }
+
+  test("a whole second upsert between listing and reading: both writers' rows survive") {
+    val p = tmpDir("mlrace") + "/meta"
+    MetadataLedger.upsert(spark, p, "silver", Seq(key("Delhi", "2026-02-13")))
+    var listings = 0
+    withHook { step =>
+      if (step == "listed") {
+        listings += 1
+        // the second writer publishes and deletes the file the first one listed
+        if (listings == 1) MetadataLedger.upsert(spark, p, "silver", Seq(key("London", "2026-02-13")))
+      }
+    }(MetadataLedger.upsert(spark, p, "silver", Seq(key("Paris", "2026-02-13"))))
+    assert(listings == 3, "the first writer lists again after its listed file vanished")
+    assert(cities(p) == Seq("Delhi", "London", "Paris"))
+    assert(visible(p).size == 1)
+  }
+
+  test("four writers racing: every upsert succeeds and no row is lost") {
+    (1 to 10).foreach { round =>
       val p = tmpDir("mlrace") + "/meta"
-      MetadataLedger.ensure(spark, p)
-      val lock = new java.io.File(p + "._lock")
-      assert(lock.createNewFile())
-      assert(lock.setLastModified(System.currentTimeMillis() - 3600 * 1000L))
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      val outcomes = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-      val threads = Seq("Delhi", "London").map { city =>
-        new Thread(() => {
-          gate.await()
-          try {
-            MetadataLedger.upsert(spark, p, entries(("silver", city, "2026-02-13")))
-            outcomes.put(city, true)
-          } catch { case _: Exception => outcomes.put(city, false) }
-        })
-      }
+      MetadataLedger.upsert(spark, p, "silver", Seq(key("Base", "2026-02-13")))
+      val writers = Seq("Delhi", "London", "Paris", "Tokyo")
+      val gate = new CountDownLatch(1)
+      val failures = new ConcurrentHashMap[String, Throwable]()
+      def thread(name: String)(body: => Unit) = new Thread(() => {
+        gate.await()
+        try body catch { case e: Throwable => failures.put(name, e) }
+      })
+      val threads = writers.map(city =>
+        thread(city)(MetadataLedger.upsert(spark, p, "silver", Seq(key(city, "2026-02-13"))))) :+
+        // a reader in the middle of the race must still see the committed row
+        thread("reader")((1 to 5).foreach(_ => assert(cities(p).contains("Base"), cities(p))))
       threads.foreach(_.start()); gate.countDown(); threads.foreach(_.join())
-      val winners = Seq("Delhi", "London").filter(outcomes.get(_))
-      assert(winners.nonEmpty, s"round $round: at least one breaker must acquire")
-      val got = MetadataLedger.read(spark, p).select("city").as[String].collect().toSet
-      winners.foreach { c =>
-        assert(got.contains(c),
-          s"round $round: writer $c reported success but its row is missing — lost update")
-      }
-      assert(!lock.exists(), s"round $round: lease must be released")
+      assert(failures.isEmpty, s"round $round: $failures")
+      assert(cities(p) == ("Base" +: writers).sorted, s"round $round: lost update")
     }
-  }
-
-  test("breaker that loses the stat-rename race must not steal a fresh lease") {
-    // Deterministic replay of the interleaving the threaded race test can
-    // only hit probabilistically: writer B observes a STALE lease, then —
-    // before B's rename — writer A breaks it and acquires a FRESH lease.
-    // B's rename now grabs A's lease; the token check must detect the
-    // theft, restore A's lease untouched, and fail B loudly. (Without the
-    // check both writers proceed and the later swap drops the earlier
-    // writer's rows — the lost update the r16 driver run caught.)
-    val p = tmpDir("mlsteal") + "/meta"
-    MetadataLedger.ensure(spark, p)
-    val lock = new java.io.File(p + "._lock")
-    assert(lock.createNewFile())
-    assert(lock.setLastModified(System.currentTimeMillis() - 3600 * 1000L))
-    val freshToken = "fresh-holder-token"
-    MetadataLedger.onStaleObservedForTest = () => {
-      // simulate the concurrent winner: stale lease replaced by a fresh one
-      assert(lock.delete())
-      java.nio.file.Files.write(lock.toPath,
-        freshToken.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
-    try {
-      val e = intercept[IllegalStateException] {
-        MetadataLedger.upsert(spark, p, entries(("silver", "Delhi", "2026-02-13")))
-      }
-      assert(e.getMessage.contains("fresh lease"))
-    } finally MetadataLedger.onStaleObservedForTest = () => ()
-    assert(lock.exists(), "the stolen fresh lease must be restored")
-    assert(new String(java.nio.file.Files.readAllBytes(lock.toPath),
-      java.nio.charset.StandardCharsets.UTF_8) == freshToken,
-      "the restored lease must carry the displaced holder's token")
-    assert(MetadataLedger.read(spark, p).count() == 0,
-      "the failed breaker must not have touched the ledger")
-    lock.delete()
   }
 
   test("property: upsert result always equals brute-force set-of-keys, one row each") {
@@ -145,12 +163,12 @@ class MetadataLedgerSpec extends SparkFunSuite {
       val p = tmpDir("mlp") + "/meta"
       MetadataLedger.ensure(spark, p)
       val batches = Seq.fill(2)(randomBatch())
-      batches.foreach(b => MetadataLedger.upsert(spark, p, entries(b: _*)))
+      for (b <- batches; (layer, keys) <- b.groupBy(_._1))
+        MetadataLedger.upsert(spark, p, layer, keys.map { case (_, c, d) => key(c, d) })
       val expectKeys = batches.flatten.toSet
-      val got = MetadataLedger.read(spark, p).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getDate(2).toString)).toSet
-      assert(got == expectKeys)
-      assert(MetadataLedger.read(spark, p).count() == expectKeys.size)
+      val got = MetadataLedger.read(spark, p)
+      assert(got.map(r => (r.getString(0), r.getString(1), r.getDate(2).toString)).toSet == expectKeys)
+      assert(got.size == expectKeys.size)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.sql.Date
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
@@ -31,7 +32,7 @@ class PipelineSpec extends SparkFunSuite {
     assert(delhi.getAs[Long]("record_count") == 1L)
     // ledger has one row per (layer, city, date)
     val ledger = MetadataLedger.read(spark, conf.metadataPath)
-    assert(ledger.count() == 4)
+    assert(ledger.size == 4)
   }
 
   test("rerun is incremental and idempotent: second run processes 0 silver partitions") {
@@ -81,5 +82,72 @@ class PipelineSpec extends SparkFunSuite {
     // the day-1 partition survived the day-2 dynamic overwrite
     val goldFile1After = gold.filter(col("date") === lit("2026-02-13")).collect()
     assert(goldFile1.toSeq == goldFile1After.toSeq)
+  }
+
+  private def goldRows(conf: Pipeline.Config): Seq[Row] =
+    spark.read.parquet(conf.goldRoot).select("city", "date", "avg_temp", "record_count")
+      .orderBy("city", "date").collect().toSeq
+
+  test("a crash at any ledger publish step leaves the next run equal to a clean one") {
+    // day 1, then a same-day rerun whose bronze append the ledger skips, then
+    // day 2. Losing day 1's stamps would reprocess it and count that append.
+    val (day1, day2) = (Date.valueOf("2026-02-13"), Date.valueOf("2026-02-14"))
+    val fetcher = new FakeFetcher(Map("Delhi" -> 31.5, "London" -> 8.25))
+    def keys(day: Date) = Seq(Row("Delhi", day), Row("London", day))
+    def scenario(crash: Option[(String, Seq[Row])]): (Pipeline.RunResult, Seq[Row], Seq[Row]) = {
+      val conf = Pipeline.Config(tmpDir("pipecrash"), cities = Ingestion.defaultCities.take(2),
+        fullRefreshGold = false)
+      Pipeline.run(spark, conf, fetcher, day1)
+      Pipeline.run(spark, conf, fetcher, day1)
+      // a silver stamp of `keys` aborted at `step`, as a crashed writer leaves it
+      for ((step, keys) <- crash) {
+        MetadataLedger.onStepForTest = s => if (s == step) throw new IllegalStateException(s"crash at $s")
+        try intercept[IllegalStateException](MetadataLedger.upsert(spark, conf.metadataPath, Silver.layerName, keys))
+        finally MetadataLedger.onStepForTest = _ => ()
+      }
+      val res = Pipeline.run(spark, conf, fetcher, day2)
+      (res, goldRows(conf), MetadataLedger.read(spark, conf.metadataPath).map(r => Row(r.get(0), r.get(1), r.get(2)))
+        .sortBy(_.toString))
+    }
+    val clean = scenario(None)
+    assert(clean._1 == Pipeline.RunResult(2, 2))
+    assert(clean._2.map(_.getLong(3)) == Seq(1L, 1L, 1L, 1L))
+    // unpublished stamps for day 2 must not count; published re-stamps of day 1 must
+    for (crash <- Seq("written" -> (keys(day1) ++ keys(day2)), "published" -> keys(day1)))
+      assert(scenario(Some(crash)) == clean, s"crash at ${crash._1}")
+  }
+
+  test("a null reading fails its partition only: gold moves on for every other city") {
+    val conf = Pipeline.Config(tmpDir("pipenull"), cities = Ingestion.defaultCities.take(2))
+    val days = Seq("2026-02-13", "2026-02-14", "2026-02-15").map(Date.valueOf)
+    def fetcher(nullLondon: Boolean) = new Ingestion.Fetcher {
+      def fetch(city: Ingestion.City): String =
+        if (nullLondon && city.name == "London")
+          apiJson(0.0).replace("\"temperature_2m\":0.0", "\"temperature_2m\":null")
+        else apiJson(if (city.name == "Delhi") 31.5 else 8.25)
+    }
+    assert(Pipeline.run(spark, conf, fetcher(nullLondon = false), days(0)) == Pipeline.RunResult(2, 2))
+    for ((day, nullLondon) <- Seq(days(1) -> true, days(2) -> false)) {
+      val e = intercept[Layers.EmptyPartitionsException](Pipeline.run(spark, conf, fetcher(nullLondon), day))
+      assert(e.getMessage == "empty partitions after transform: London/2026-02-14", s"$day: ${e.getMessage}")
+    }
+    val gold = goldRows(conf).map(r => (r.getString(0), r.getDate(1)))
+    assert(gold == Seq("Delhi" -> days(0), "Delhi" -> days(1), "Delhi" -> days(2),
+      "London" -> days(0), "London" -> days(2)))
+  }
+
+  test("any other silver failure stops the run before gold") {
+    val conf = Pipeline.Config(tmpDir("pipestop"), cities = Ingestion.defaultCities.take(2))
+    val fetcher = new FakeFetcher(Map("Delhi" -> 31.5, "London" -> 8.25))
+    val (day1, day2) = (Date.valueOf("2026-02-13"), Date.valueOf("2026-02-14"))
+    Pipeline.run(spark, conf, fetcher, day1)
+    // silver writes day 2, then its ledger stamp fails
+    MetadataLedger.onStepForTest = s => if (s == "written") throw new IllegalStateException("stamp failed")
+    val e = try intercept[IllegalStateException](Pipeline.run(spark, conf, fetcher, day2))
+    finally MetadataLedger.onStepForTest = _ => ()
+    assert(e.getMessage == "stamp failed" && e.getSuppressed.isEmpty)
+    assert(goldRows(conf).map(_.getDate(1)).distinct == Seq(day1), "gold must not run over unstamped silver")
+    assert(MetadataLedger.processed(spark, conf.metadataPath, Gold.layerName) ==
+      Set(Row("Delhi", day1), Row("London", day1)))
   }
 }

@@ -35,7 +35,7 @@ class SilverGoldSpec extends SparkFunSuite {
       Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta")
     }
     assert(e.getMessage.contains("empty partitions"))
-    assert(MetadataLedger.read(spark, s"$root/meta").count() == 0,
+    assert(MetadataLedger.read(spark, s"$root/meta").isEmpty,
       "a failed validation must not stamp the ledger, so a fixed rerun reprocesses")
   }
 
@@ -50,13 +50,13 @@ class SilverGoldSpec extends SparkFunSuite {
     }.getMessage
     val first = failedRun()
     assert(first.contains("empty partitions") && first.contains("Tokyo"), first)
-    assert(MetadataLedger.read(spark, s"$root/meta").count() == 0,
+    assert(MetadataLedger.read(spark, s"$root/meta").isEmpty,
       "a failed validation must not stamp the ledger")
     assert(failedRun() == first, "the unstamped partition is retried and fails the same way")
     // the fixed partition is processed and stamped
     writeBronze(spark, Seq(bronzeRow("Tokyo", "2026-02-13", temp = 12.0)), s"$root/data")
     assert(Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta") == 1)
-    assert(MetadataLedger.read(spark, s"$root/meta").count() == 1)
+    assert(MetadataLedger.read(spark, s"$root/meta").size == 1)
   }
 
   test("silver: missing bronze root is fatal (reference asymmetry, silver.py:8-12)") {
@@ -135,7 +135,7 @@ class SilverGoldSpec extends SparkFunSuite {
       Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta")
     }
     assert(e.getMessage.contains("1 gold partitions produced NULL avg_temp"))
-    assert(MetadataLedger.read(spark, s"$root/meta").count() == 0,
+    assert(MetadataLedger.read(spark, s"$root/meta").isEmpty,
       "a failed guard must not stamp the ledger")
     writeSilver(root, 30.0)
     assert(Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta") == 2,
