@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.ParquetLake
 
@@ -11,7 +12,14 @@ import graft.sources.ParquetLake
   * new keys append.
   *
   * Scale shape: only the Hive partitions that contain updated keys are
-  * read+rewritten, published through [[ParquetLake.overwritePartitionsStaged]]
+  * read+rewritten. They are found with the driver-side partition catalog
+  * ([[ParquetLake.partitionDirs]], no listing job) and read with the updates'
+  * schema declared ([[ParquetLake.readPartitions]]), so partition values are
+  * cast from the directory names to the updates' types, never inferred: a
+  * string partition `007` is merged back into `007`, not into a new `7`.
+  * The table's columns must be the updates' columns; a merge that would
+  * drop or add one throws before any live file moves. The rewrite is
+  * published through [[ParquetLake.overwritePartitionsStaged]]
   * (crash-safe per-partition rename swap — NOT dynamic partition overwrite,
   * whose delete-then-publish commit can destroy a partition's prior rows
   * mid-crash); untouched partitions are never opened. The merge itself is
@@ -60,14 +68,22 @@ object MergeByKey {
       // explicit schema: an all-empty updates write may produce zero part
       // files, which schema inference would reject
       val u = spark.read.schema(updates.schema).parquet(updStaging.toString)
-      val touched = u.select(partitionCols.map(col): _*).distinct()
-      val touchedCount = touched.count()
-      if (touchedCount == 0) return 0L
-      val existing =
-        if (!ParquetLake.exists(spark, root)) u.limit(0)
-        else if (partitionCols.isEmpty) spark.read.parquet(root) // whole table IS the scope
-        else graft.sources.PartitionScope.scopeTo(
-          spark.read.parquet(root), touched, literalThreshold = 256)
+      val touched = u.select(partitionCols.map(col): _*).distinct().collect().toSet
+      if (touched.isEmpty) return 0L
+      // an unpartitioned table is the catalog's depth-0 case: its root is its one leaf
+      val dirs =
+        if (!ParquetLake.exists(spark, root)) Nil
+        else ParquetLake.partitionDirs(spark, root, StructType(partitionCols.map(u.schema(_))))
+      // the declared-schema read would silently drop a table column the
+      // updates lack, and null-fill one the table lacks: refuse both
+      dirs.headOption.foreach { d =>
+        val tableCols = ParquetLake.fileSchema(spark, d.files.head).fieldNames.toSet
+        val updateCols = u.columns.toSet -- partitionCols
+        require(tableCols == updateCols,
+          s"updates columns $updateCols differ from table $root columns $tableCols")
+      }
+      val existing = ParquetLake.readPartitions(spark, root, u.schema,
+        dirs.filter(d => touched.contains(d.values)).map(_.path))
       val ord =
         if (versionCol.isEmpty) Seq(col("_src").desc)
         else Seq(col(versionCol).desc, col("_src").desc)
@@ -85,7 +101,7 @@ object MergeByKey {
       // updates file) BEFORE any live file moves, so no separate
       // checkpoint of the merge result is needed.
       ParquetLake.overwritePartitionsStaged(spark, merged, root, partitionCols)
-      touchedCount
+      touched.size.toLong
     } finally {
       hfs.delete(updStaging, true)
     }

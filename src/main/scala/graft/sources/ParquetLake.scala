@@ -1,11 +1,14 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Partitioned-Parquet lake primitives.
   *
@@ -32,8 +35,8 @@ object ParquetLake {
 
   /** One leaf directory of a Hive-partitioned table: its partition values in
     * partition-schema order, typed as `collect` returns them (null for
-    * `__HIVE_DEFAULT_PARTITION__`), and its path. */
-  final case class PartitionDir(values: Row, path: String)
+    * `__HIVE_DEFAULT_PARTITION__`), its path and its data files. */
+  final case class PartitionDir(values: Row, path: String, files: Seq[FileStatus])
 
   /** Driver-side partition catalog: the `col=value` leaf directories under
     * `root`, one directory level per field of `partitionSchema`, found with
@@ -44,9 +47,14 @@ object ParquetLake {
     *
     * Skips `_`/`.`-prefixed entries (in-flight `_temporary` output,
     * checksums, markers) and leaves that hold no data file, as Spark's file
-    * index does. Names are unescaped and values cast the way Spark's
-    * partition discovery does, so `values` equal the partition columns Spark
-    * reads back. A missing root throws `FileNotFoundException`. */
+    * index does. Names are unescaped and each value is cast to its
+    * `partitionSchema` type, never inferred, so `values` equal the partition
+    * columns Spark reads back with that schema declared: under a string
+    * column `region=007` is "007", not 7. An empty `partitionSchema` lists an
+    * unpartitioned table, whose root is its one leaf. A layout of another
+    * depth (a data file above the leaf level, a subdirectory in a leaf) or a
+    * directory not named `<field>=<value>` throws `IllegalArgumentException`;
+    * a missing root throws `FileNotFoundException`. */
   def partitionDirs(spark: SparkSession, root: String,
                     partitionSchema: StructType): Seq[PartitionDir] = {
     val hfs = fs(spark, root)
@@ -60,17 +68,22 @@ object ParquetLake {
       }
     def walk(dir: Path, level: Int, values: List[Any]): Seq[PartitionDir] = {
       val children = hfs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath))
+      val (files, subdirs) = children.partition(_.isFile)
+      def depth = partitionSchema.fieldNames.mkString("(", ", ", ")")
       if (level == partitionSchema.length) {
-        if (children.exists(_.isFile)) Seq(PartitionDir(Row.fromSeq(values.reverse), dir.toString))
-        else Nil
-      } else children.filter(_.isDirectory).flatMap { s =>
-        val name = s.getPath.getName
-        val eq = name.indexOf('=')
-        val field = partitionSchema(level).name
-        require(eq > 0 && ExternalCatalogUtils.unescapePathName(name.take(eq)) == field,
-          s"unexpected directory ${s.getPath} in table $root: expected $field=<value>")
-        walk(s.getPath, level + 1,
-          value(level, ExternalCatalogUtils.unescapePathName(name.drop(eq + 1))) :: values)
+        require(subdirs.isEmpty, s"table $root is partitioned deeper than $depth: $dir has subdirectories")
+        if (files.isEmpty) Nil else Seq(PartitionDir(Row.fromSeq(values.reverse), dir.toString, files))
+      } else {
+        require(files.isEmpty, s"table $root is partitioned shallower than $depth: $dir holds data files")
+        subdirs.flatMap { s =>
+          val name = s.getPath.getName
+          val eq = name.indexOf('=')
+          val field = partitionSchema(level).name
+          require(eq > 0 && ExternalCatalogUtils.unescapePathName(name.take(eq)) == field,
+            s"unexpected directory ${s.getPath} in table $root: expected $field=<value>")
+          walk(s.getPath, level + 1,
+            value(level, ExternalCatalogUtils.unescapePathName(name.drop(eq + 1))) :: values)
+        }
       }
     }
     walk(hfs.makeQualified(new Path(root)), 0, Nil)
@@ -78,11 +91,25 @@ object ParquetLake {
 
   /** Read only the given leaf directories of a partitioned table (paths from
     * [[partitionDirs]]), with a declared schema: no footer is read for
-    * schema inference, and `basePath` keeps the partition columns. */
+    * schema inference, `basePath` keeps the partition columns, and their
+    * values are cast from the directory names to the declared types. No
+    * directories read as an empty table. */
   def readPartitions(spark: SparkSession, root: String, schema: StructType,
                      dirs: Seq[String]): DataFrame =
     if (dirs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else spark.read.schema(schema).option("basePath", root).parquet(dirs: _*)
+
+  /** The Spark schema of one Parquet file, from its footer, read on the
+    * driver: Spark's own schema inference runs a job for it. The Spark schema
+    * a Spark writer stores in the footer wins over the converted Parquet
+    * schema, as in Spark's inference, so types only it records survive. */
+  private[graft] def fileSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration))
+    try ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
+  }
 
   /** Missing-input-tolerant read: absent path → empty DataFrame with the
     * given schema (the reference's gold layer catches IOException and
@@ -179,6 +206,10 @@ object ParquetLake {
     * (every scan pays per-file open/footer cost; listings dominate).
     *
     * Shape, chosen for correctness at scale:
+    *  - the table is listed with [[partitionDirs]] and read with
+    *    [[readPartitions]], partition columns declared as strings: every row
+    *    is written back under the directory name it came from (an inferred
+    *    type would move `region=007` rows into a new `region=7`);
     *  - per-Hive-partition output file counts are derived from row counts ×
     *    the table's measured bytes/row (a bare repartition on the partition
     *    columns would force exactly one file — and one task — per
@@ -193,19 +224,16 @@ object ParquetLake {
                         partitionCols: Seq[String],
                         targetBytes: Long = 128L * 1024 * 1024): (Long, Long) = {
     import org.apache.spark.sql.functions._
-    val hfs = fs(spark, root)
-    def scan(): (Long, Long) = {
-      val it = hfs.listFiles(new Path(root), true)
-      var n = 0L; var b = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) { n += 1; b += f.getLen }
-      }
-      (n, b)
-    }
-    val (before, totalBytes) = scan()
+    val partSchema = StructType(partitionCols.map(StructField(_, StringType)))
+    def listing() = partitionDirs(spark, root, partSchema)
+    def fileCount() = listing().map(_.files.size.toLong).sum
+    val dirs = listing()
+    val files = dirs.flatMap(_.files)
+    val before = files.size.toLong
     if (before == 0) return (0L, 0L)
-    val df = spark.read.parquet(root)
+    val totalBytes = files.map(_.getLen).sum
+    val df = readPartitions(spark, root,
+      StructType(fileSchema(spark, files.head).fields ++ partSchema.fields), dirs.map(_.path))
     val dataCols = df.columns.filterNot(partitionCols.contains).toSeq
     val totalRows = df.count()
     if (totalRows == 0) return (before, before)
@@ -217,7 +245,7 @@ object ParquetLake {
       val nFiles = math.max(1L, totalBytes / math.max(targetBytes, 1L) + 1L)
         .min(Int.MaxValue.toLong).toInt
       atomicReplace(spark, df.repartition(nFiles), root)
-      return (before, scan()._1)
+      return (before, fileCount())
     }
     val bytesPerRow = math.max(1.0, totalBytes.toDouble / totalRows)
     val stats = df.groupBy(partitionCols.map(col): _*)
@@ -232,8 +260,8 @@ object ParquetLake {
     salted.repartition(nTasks, (partitionCols :+ "_salt").map(col): _*)
       .drop("_salt", "_nfiles")
       .write.partitionBy(partitionCols: _*).parquet(staging.toString)
-    publishStaged(hfs, staging, root, partitionCols.length)
-    (before, scan()._1)
+    publishStaged(fs(spark, root), staging, root, partitionCols.length)
+    (before, fileCount())
   }
 
   /** Full-table atomic replace via write-temp-then-swap, for whole-table

@@ -2,11 +2,6 @@ package graft.pipeline
 
 import java.sql.Date
 import java.time.LocalDate
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkFunSuite
 import graft.meta.MetadataLedger
@@ -16,36 +11,6 @@ import graft.pipeline.WeatherFixtures._
   * 32-path parallel-listing threshold: the partition catalog must keep
   * listing on the driver and the cycle's job count flat. */
 class PipelineJobsSpec extends SparkFunSuite {
-
-  private val Tag = "graft.test.cycle"
-
-  /** Job descriptions of the jobs `body` submits from this thread. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val seen = new ConcurrentLinkedQueue[String]()
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(Tag))).foreach {
-          case "body" => seen.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
-          case _ => drained.countDown()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(Tag, "body")
-      body
-      // listener events arrive in order: once the marker job is seen, every
-      // job of `body` has been counted
-      sc.setLocalProperty(Tag, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener did not drain")
-    } finally {
-      sc.setLocalProperty(Tag, null)
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq
-  }
 
   test("daily cycle on 2 cities x 33 dates: no listing job, at most 4 jobs") {
     val cities = Ingestion.defaultCities.take(2)

@@ -50,4 +50,31 @@ class CompactionSpec extends SparkFunSuite {
       s"unpartitioned compaction must shrink the file count ($before -> $after)")
     assert(spark.read.parquet(root).as[Int].collect().sorted.toSeq == (1 to 60))
   }
+
+  test("zero-padded string partitions are compacted in place") {
+    import spark.implicits._
+    val root = tmpDir("compact5") + "/data"
+    Seq((1L, "007"), (2L, "007"), (3L, "010")).foreach { r =>
+      Seq(r).toDF("id", "region").write.mode("append").partitionBy("region").parquet(root)
+    }
+    val (before, after) = ParquetLake.compactPartitions(spark, root, Seq("region"))
+    assert(before == 3 && after == 2, s"$before -> $after")
+    assert(new java.io.File(root).list().filter(_.startsWith("region=")).sorted.toSeq ==
+      Seq("region=007", "region=010"))
+    val got = spark.read.schema("id LONG, region STRING").parquet(root)
+      .as[(Long, String)].collect().sorted.toSeq
+    assert(got == Seq((1L, "007"), (2L, "007"), (3L, "010")))
+  }
+
+  test("a type only Spark's stored footer schema records survives compaction") {
+    val root = tmpDir("compact6") + "/data"
+    Seq("a", "B").foreach { n =>
+      spark.sql(s"SELECT CAST('$n' AS STRING COLLATE UTF8_LCASE) AS name, 'x' AS region")
+        .write.mode("append").partitionBy("region").parquet(root)
+    }
+    assert(spark.read.parquet(root).schema("name").dataType.sql == "STRING COLLATE UTF8_LCASE")
+    val (before, after) = ParquetLake.compactPartitions(spark, root, Seq("region"))
+    assert(before == 2 && after == 1, s"$before -> $after")
+    assert(spark.read.parquet(root).schema("name").dataType.sql == "STRING COLLATE UTF8_LCASE")
+  }
 }

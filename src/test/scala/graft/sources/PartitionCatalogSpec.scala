@@ -9,66 +9,109 @@ import graft.SparkFunSuite
 
 /** The driver-side partition catalog ([[ParquetLake.partitionDirs]]) and
   * the pending read ([[ParquetLake.readPartitions]]) against Spark's own
-  * partition discovery. */
+  * partition discovery, on the pipeline's (city, date) layout and on the
+  * single-column layouts a keyed merge brings: an integer `cell_id`
+  * (IvfIndex's postings) and a zero-padded string `region`. */
 class PartitionCatalogSpec extends SparkFunSuite {
-  import spark.implicits._
 
-  private val parts = StructType(Seq(StructField("city", StringType), StructField("date", DateType)))
-  private val schema = StructType(StructField("v", LongType) +: parts.fields)
+  /** A partition schema and three of its keys. */
+  private case class Layout(parts: StructType, keys: Seq[Row]) {
+    val schema = StructType(StructField("v", LongType) +: parts.fields)
+    /** The leaf directory of `key`, relative to the table root. */
+    def leaf(key: Row): String =
+      parts.fieldNames.zip(key.toSeq).map { case (n, v) => s"$n=$v" }.mkString("/")
+  }
 
-  private def table(rows: Seq[(Long, String, String)]): String = {
+  private val d13 = Date.valueOf("2026-02-13")
+  private val cityDate = Layout(
+    StructType(Seq(StructField("city", StringType), StructField("date", DateType))),
+    Seq(Row("Delhi", d13), Row("Delhi", Date.valueOf("2026-02-14")), Row("London", d13)))
+  private val layouts = Seq(cityDate,
+    Layout(StructType(Seq(StructField("cell_id", IntegerType))), Seq(Row(7), Row(10), Row(-1))),
+    Layout(StructType(Seq(StructField("region", StringType))), Seq(Row("007"), Row("010"), Row("7"))))
+
+  /** A table of `l` holding one row `v` per (v, key). */
+  private def table(l: Layout, rows: Seq[(Long, Row)]): String = {
     val root = tmpDir("catalog") + "/t"
-    rows.map { case (v, c, d) => (v, c, Date.valueOf(d)) }.toDF("v", "city", "date")
-      .write.partitionBy("city", "date").parquet(root)
+    val data = rows.map { case (v, key) => Row.fromSeq(v +: key.toSeq) }
+    spark.createDataFrame(spark.sparkContext.parallelize(data), l.schema)
+      .write.partitionBy(l.parts.fieldNames: _*).parquet(root)
     root
   }
 
-  private def readAll(root: String, dirs: Seq[ParquetLake.PartitionDir]): Set[Row] =
-    ParquetLake.readPartitions(spark, root, schema, dirs.map(_.path)).collect().toSet
+  private def readAll(l: Layout, root: String, dirs: Seq[ParquetLake.PartitionDir]): Set[Row] =
+    ParquetLake.readPartitions(spark, root, l.schema, dirs.map(_.path)).collect().toSet
 
   test("escaped city names round-trip through the catalog and the read") {
     val cities = Seq("New York", "a=b", "x/y", "São Paulo", "50% off", "{br}[ack]?*")
-    val root = table(cities.zipWithIndex.map { case (c, i) => (i.toLong, c, "2026-02-13") })
-    val dirs = ParquetLake.partitionDirs(spark, root, parts)
+    val root = table(cityDate, cities.zipWithIndex.map { case (c, i) => (i.toLong, Row(c, d13)) })
+    val dirs = ParquetLake.partitionDirs(spark, root, cityDate.parts)
     assert(dirs.map(_.values.getString(0)).toSet == cities.toSet)
-    assert(dirs.forall(_.values.getDate(1) == Date.valueOf("2026-02-13")))
-    assert(readAll(root, dirs) == spark.read.schema(schema).parquet(root).collect().toSet)
-    assert(readAll(root, dirs).map(_.getString(1)) == cities.toSet)
+    assert(dirs.forall(_.values.getDate(1) == d13))
+    assert(readAll(cityDate, root, dirs) ==
+      spark.read.schema(cityDate.schema).parquet(root).collect().toSet)
+    assert(readAll(cityDate, root, dirs).map(_.getString(1)) == cities.toSet)
+    // every layout's keys come back typed as declared: "007" is neither 7 nor "7"
+    for (l <- layouts) {
+      val root = table(l, l.keys.zipWithIndex.map { case (k, i) => (i.toLong, k) })
+      val dirs = ParquetLake.partitionDirs(spark, root, l.parts)
+      assert(dirs.map(_.values).toSet == l.keys.toSet, l.parts)
+      assert(readAll(l, root, dirs) == spark.read.schema(l.schema).parquet(root).collect().toSet)
+      assert(readAll(l, root, dirs).size == 3, l.parts)
+    }
   }
 
   test("__HIVE_DEFAULT_PARTITION__ is a null key, read back null-safely") {
-    val root = table(Seq((1L, null, "2026-02-13"), (2L, "Delhi", "2026-02-13")))
-    val dirs = ParquetLake.partitionDirs(spark, root, parts)
-    val nullDir = dirs.filter(_.values.isNullAt(0))
-    assert(nullDir.map(_.values) == Seq(Row(null, Date.valueOf("2026-02-13"))))
-    assert(readAll(root, nullDir) == Set(Row(1L, null, Date.valueOf("2026-02-13"))))
+    for (l <- layouts) {
+      val nullKey = Row.fromSeq(null +: l.keys.head.toSeq.tail)
+      val root = table(l, Seq(1L -> nullKey, 2L -> l.keys.head))
+      val nullDir = ParquetLake.partitionDirs(spark, root, l.parts).filter(_.values.isNullAt(0))
+      assert(nullDir.map(_.values) == Seq(nullKey), l.parts)
+      assert(readAll(l, root, nullDir) == Set(Row.fromSeq(1L +: nullKey.toSeq)), l.parts)
+    }
   }
 
   test("_temporary, dot-prefixed and empty leaf directories are ignored") {
-    val root = table(Seq((1L, "Delhi", "2026-02-13")))
-    def touch(rel: String): Unit = {
-      val f = new File(root, rel); f.getParentFile.mkdirs(); assert(f.createNewFile())
+    for (l <- layouts) {
+      val Seq(k0, k1, k2) = l.keys
+      val root = table(l, Seq(1L -> k0))
+      def touch(rel: String): Unit = {
+        val f = new File(root, rel); f.getParentFile.mkdirs(); assert(f.createNewFile(), rel)
+      }
+      val levels = l.leaf(k1).split('/')
+      touch(s"_temporary/0/${l.leaf(k1)}/part-0.parquet")
+      touch(s".staging/${l.leaf(k1)}/part-0.parquet")
+      touch((levels.init :+ s".${levels.last}" :+ "part-0.parquet").mkString("/"))
+      assert(new File(root, l.leaf(k1)).mkdirs()) // empty leaf
+      touch(s"${l.leaf(k2)}/_SUCCESS") // leaf with markers only
+      touch(s"${l.leaf(k2)}/.part-0.parquet.crc")
+      if (l.parts.length > 1) touch(s"${l.leaf(k2).split('/').head}/_SUCCESS") // marker above the leaves
+      val dirs = ParquetLake.partitionDirs(spark, root, l.parts)
+      assert(dirs.map(_.values) == Seq(k0), l.parts)
+      assert(readAll(l, root, dirs) == Set(Row.fromSeq(1L +: k0.toSeq)), l.parts)
     }
-    touch("_temporary/0/city=Delhi/date=2026-02-14/part-0.parquet")
-    touch(".staging/city=Delhi/date=2026-02-15/part-0.parquet")
-    touch("city=Delhi/.date=2026-02-16/part-0.parquet")
-    assert(new File(root, "city=Delhi/date=2026-02-17").mkdirs()) // empty leaf
-    touch("city=Delhi/date=2026-02-18/_SUCCESS") // leaf with markers only
-    touch("city=Delhi/date=2026-02-18/.part-0.parquet.crc")
-    touch("city=London/_SUCCESS")
-    val dirs = ParquetLake.partitionDirs(spark, root, parts)
-    assert(dirs.map(_.values) == Seq(Row("Delhi", Date.valueOf("2026-02-13"))))
-    assert(readAll(root, dirs) == Set(Row(1L, "Delhi", Date.valueOf("2026-02-13"))))
   }
 
   test("a missing root throws; an off-layout directory fails loudly") {
     val base = tmpDir("catalog")
-    intercept[java.io.FileNotFoundException] {
-      ParquetLake.partitionDirs(spark, s"$base/nope", parts)
+    for (l <- layouts) {
+      intercept[java.io.FileNotFoundException] {
+        ParquetLake.partitionDirs(spark, s"$base/nope", l.parts)
+      }
+      val root = table(l, Seq(1L -> l.keys.head))
+      assert(new File(root, (l.leaf(l.keys.head).split('/').init :+ "stray").mkString("/")).mkdirs())
+      val e = intercept[IllegalArgumentException](ParquetLake.partitionDirs(spark, root, l.parts))
+      assert(e.getMessage.contains(s"expected ${l.parts.last.name}=<value>"), e.getMessage)
+      // a partition schema of the wrong depth: one level short, one level over
+      val ok = table(l, Seq(1L -> l.keys.head))
+      val short = intercept[IllegalArgumentException] {
+        ParquetLake.partitionDirs(spark, ok, StructType(l.parts.fields.init))
+      }
+      assert(short.getMessage.contains("deeper than"), short.getMessage)
+      val over = intercept[IllegalArgumentException] {
+        ParquetLake.partitionDirs(spark, ok, l.parts.add("extra", StringType))
+      }
+      assert(over.getMessage.contains("shallower than"), over.getMessage)
     }
-    val root = table(Seq((1L, "Delhi", "2026-02-13")))
-    assert(new File(root, "city=Delhi/stray").mkdirs())
-    val e = intercept[IllegalArgumentException](ParquetLake.partitionDirs(spark, root, parts))
-    assert(e.getMessage.contains("expected date=<value>"))
   }
 }
