@@ -111,10 +111,11 @@ object ParquetLake {
     finally reader.close()
   }
 
-  /** Missing-input-tolerant read: absent path → empty DataFrame with the
-    * given schema (the reference's gold layer catches IOException and
-    * returns an empty set, gold.py:26-28; we expose the tolerant form and
-    * let callers choose strictness per layer). */
+  /** Read `root` with a declared schema, or an empty DataFrame of that
+    * schema when `root` does not exist yet: a table that only some runs
+    * have written, such as the streaming dedup ledger before its first
+    * batch. Gold's tolerance of a missing silver root (gold.py:26-28)
+    * tests [[exists]] instead. */
   def readOrEmpty(spark: SparkSession, root: String, schema: StructType): DataFrame =
     if (exists(spark, root)) spark.read.schema(schema).parquet(root)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -248,12 +249,15 @@ object ParquetLake {
       return (before, fileCount())
     }
     val bytesPerRow = math.max(1.0, totalBytes.toDouble / totalRows)
-    val stats = df.groupBy(partitionCols.map(col): _*)
+    val keys = partitionCols.indices.map(i => s"_key$i")
+    val stats = df.groupBy(partitionCols.zip(keys).map { case (c, k) => col(c).as(k) }: _*)
       .agg(count(lit(1)).as("_rows"))
       .withColumn("_nfiles",
         greatest(lit(1L), ceil(col("_rows") * bytesPerRow / targetBytes)))
       .drop("_rows")
-    val salted = df.join(broadcast(stats), partitionCols)
+    // null-safe: a __HIVE_DEFAULT_PARTITION__ directory reads back as a null key
+    val onKeys = partitionCols.zip(keys).map { case (c, k) => col(c) <=> col(k) }.reduce(_ && _)
+    val salted = df.join(broadcast(stats), onKeys).drop(keys: _*)
       .withColumn("_salt", pmod(xxhash64(dataCols.map(col): _*), col("_nfiles")))
     val nTasks = math.max(1, math.min(Int.MaxValue.toLong, totalBytes / math.max(targetBytes, 1L) + 1).toInt)
     val staging = new Path(root + ".compacting-" + System.nanoTime())
@@ -288,7 +292,7 @@ object ParquetLake {
     if (hfs.exists(target) && !hfs.rename(target, trash))
       throw new IllegalStateException(s"cannot move aside $target")
     if (!hfs.rename(staging, target)) {
-      // roll back so readers still see the previous ledger
+      // roll back so readers still see the previous table
       if (hfs.exists(trash)) hfs.rename(trash, target)
       throw new IllegalStateException(s"cannot publish $staging to $target")
     }

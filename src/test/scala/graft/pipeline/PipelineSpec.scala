@@ -118,22 +118,26 @@ class PipelineSpec extends SparkFunSuite {
   }
 
   test("a null reading fails its partition only: gold moves on for every other city") {
-    val conf = Pipeline.Config(tmpDir("pipenull"), cities = Ingestion.defaultCities.take(2))
     val days = Seq("2026-02-13", "2026-02-14", "2026-02-15").map(Date.valueOf)
-    def fetcher(nullLondon: Boolean) = new Ingestion.Fetcher {
-      def fetch(city: Ingestion.City): String =
-        if (nullLondon && city.name == "London")
-          apiJson(0.0).replace("\"temperature_2m\":0.0", "\"temperature_2m\":null")
-        else apiJson(if (city.name == "Delhi") 31.5 else 8.25)
+    val nullReading = apiJson(0.0).replace("\"temperature_2m\":0.0", "\"temperature_2m\":null")
+    // a malformed body lands as an all-null bronze row and takes the same path
+    for (badBody <- Seq(nullReading, "{not json")) {
+      val conf = Pipeline.Config(tmpDir("pipenull"), cities = Ingestion.defaultCities.take(2))
+      def fetcher(badLondon: Boolean) = new Ingestion.Fetcher {
+        def fetch(city: Ingestion.City): String =
+          if (badLondon && city.name == "London") badBody
+          else apiJson(if (city.name == "Delhi") 31.5 else 8.25)
+      }
+      assert(Pipeline.run(spark, conf, fetcher(badLondon = false), days(0)) == Pipeline.RunResult(2, 2))
+      for ((day, badLondon) <- Seq(days(1) -> true, days(2) -> false)) {
+        val e = intercept[Layers.EmptyPartitionsException](Pipeline.run(spark, conf, fetcher(badLondon), day))
+        assert(e.getMessage == "empty partitions after transform: London/2026-02-14",
+          s"$badBody, $day: ${e.getMessage}")
+      }
+      val gold = goldRows(conf).map(r => (r.getString(0), r.getDate(1)))
+      assert(gold == Seq("Delhi" -> days(0), "Delhi" -> days(1), "Delhi" -> days(2),
+        "London" -> days(0), "London" -> days(2)), badBody)
     }
-    assert(Pipeline.run(spark, conf, fetcher(nullLondon = false), days(0)) == Pipeline.RunResult(2, 2))
-    for ((day, nullLondon) <- Seq(days(1) -> true, days(2) -> false)) {
-      val e = intercept[Layers.EmptyPartitionsException](Pipeline.run(spark, conf, fetcher(nullLondon), day))
-      assert(e.getMessage == "empty partitions after transform: London/2026-02-14", s"$day: ${e.getMessage}")
-    }
-    val gold = goldRows(conf).map(r => (r.getString(0), r.getDate(1)))
-    assert(gold == Seq("Delhi" -> days(0), "Delhi" -> days(1), "Delhi" -> days(2),
-      "London" -> days(0), "London" -> days(2)))
   }
 
   test("any other silver failure stops the run before gold") {

@@ -66,6 +66,21 @@ class CompactionSpec extends SparkFunSuite {
     assert(got == Seq((1L, "007"), (2L, "007"), (3L, "010")))
   }
 
+  test("the null partition is compacted with the others") {
+    import spark.implicits._
+    val root = tmpDir("compact7") + "/data"
+    Seq((1L, null), (2L, null), (3L, "a"), (4L, "a")).foreach { r =>
+      Seq(r).toDF("id", "region").write.mode("append").partitionBy("region").parquet(root)
+    }
+    val (before, after) = ParquetLake.compactPartitions(spark, root, Seq("region"))
+    assert(before == 4 && after == 2, s"$before -> $after")
+    for (dir <- Seq("region=__HIVE_DEFAULT_PARTITION__", "region=a"))
+      assert(new java.io.File(root, dir).list().count(_.endsWith(".parquet")) == 1, dir)
+    val got = spark.read.schema("id LONG, region STRING").parquet(root)
+      .as[(Long, Option[String])].collect().sortBy(_._1).toSeq
+    assert(got == Seq((1L, None), (2L, None), (3L, Some("a")), (4L, Some("a"))))
+  }
+
   test("a type only Spark's stored footer schema records survives compaction") {
     val root = tmpDir("compact6") + "/data"
     Seq("a", "B").foreach { n =>
