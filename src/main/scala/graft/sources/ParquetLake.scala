@@ -1,5 +1,7 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -28,10 +30,32 @@ object ParquetLake {
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
 
-  /** Read a partitioned table root; partition columns (`city=`/`date=` dirs)
-    * are discovered and type-inferred by Spark. */
-  def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(root)
+  /** Read a partitioned table root, a plain table directory (not a glob),
+    * with no Spark job before its first action. The data schema is the
+    * footer schema of the first visible data file under `root`, found with
+    * driver-side `listStatus` calls (the [[hidden]] rule; empty leaves are
+    * skipped) and read with [[fileSchema]]: the one footer Spark's own
+    * inference would read, through a job, since it too assumes every part
+    * file has the same schema. `spark.sql.parquet.mergeSchema` is not
+    * consulted. Partition columns (`city=`/`date=` dirs) are not in that
+    * schema, so Spark still discovers and type-infers them from the
+    * directory names. A root with no data file, or a missing one, is left to
+    * `spark.read.parquet`, which fails with its own error. */
+  def read(spark: SparkSession, root: String): DataFrame = {
+    val hfs = fs(spark, root)
+    def firstFile(dir: Path): Option[FileStatus] = {
+      val (files, dirs) = hfs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath)).partition(_.isFile)
+      files.headOption.orElse(dirs.iterator.flatMap(d => firstFile(d.getPath)).nextOption())
+    }
+    val first = try firstFile(new Path(root)) catch { case _: FileNotFoundException => None }
+    first.fold(spark.read.parquet(root))(f => spark.read.schema(fileSchema(spark, f)).parquet(root))
+  }
+
+  /** Entries the catalog and [[read]] skip: in-flight `_temporary` output,
+    * `_SUCCESS` markers, checksums and any other `_`/`.`-prefixed name.
+    * Spark's file index skips the same, except `_`-prefixed `col=value`
+    * directories and Parquet summary files. */
+  private def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
 
   /** One leaf directory of a Hive-partitioned table: its partition values in
     * partition-schema order, typed as `collect` returns them (null for
@@ -45,9 +69,8 @@ object ParquetLake {
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) children;
     * this runs no job at all.
     *
-    * Skips `_`/`.`-prefixed entries (in-flight `_temporary` output,
-    * checksums, markers) and leaves that hold no data file, as Spark's file
-    * index does. Names are unescaped and each value is cast to its
+    * Skips [[hidden]] entries and leaves that hold no data file, as Spark's
+    * file index does. Names are unescaped and each value is cast to its
     * `partitionSchema` type, never inferred, so `values` equal the partition
     * columns Spark reads back with that schema declared: under a string
     * column `region=007` is "007", not 7. An empty `partitionSchema` lists an
@@ -59,7 +82,6 @@ object ParquetLake {
                     partitionSchema: StructType): Seq[PartitionDir] = {
     val hfs = fs(spark, root)
     val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
-    def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
     def value(level: Int, raw: String): Any =
       if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
       else {
