@@ -2,13 +2,17 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.LocalLakeFileSystem
+
 /** Canonical session factory for the graft engine.
   *
   * Defaults are sized for the harness host (local[32], 128 GiB) but every
   * knob is the one you'd set on a real cluster too: AQE on (runtime
   * re-planning + skew-join splitting), shuffle partitions matched to
   * parallelism instead of the 200 default, UTC session timezone so
-  * timestamp semantics match the DuckDB oracle.
+  * timestamp semantics match the DuckDB oracle. `file:` paths resolve to
+  * [[graft.sources.LocalLakeFileSystem]], which sets the mode of each file
+  * it writes without forking `chmod`.
   *
   * Note: writers in [[graft.sources.ParquetLake]] pass
   * `partitionOverwriteMode=dynamic` per-write, so correctness does not
@@ -28,6 +32,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.ui.enabled", "false")
+      .config(LocalLakeFileSystem.sparkConf)
 
   def local(): SparkSession = {
     val s = builder().getOrCreate()

@@ -17,7 +17,7 @@ import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64, INT96}
@@ -153,8 +153,14 @@ object MetadataLedger {
 
   private val parquetSchema = new MessageType("spark_schema", codecs.map(_.parquet).asJava)
 
+  /** The rows of one ledger file. The reader is built on `conf` itself:
+    * `ParquetReader.builder(readSupport, path)` starts from a fresh Hadoop
+    * configuration, which parses Hadoop's default resources on every read. */
   private def readFile(conf: Configuration, file: Path): Seq[Row] = {
-    val reader = ParquetReader.builder(new GroupReadSupport, file).withConf(conf).build()
+    // a vanished file throws FileNotFoundException here, from its stat
+    val reader = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(file, conf)) {
+      override def getReadSupport = new GroupReadSupport
+    }.build()
     try Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
       Row.fromSeq(codecs.map(c => if (g.getFieldRepetitionCount(c.parquet.getName) == 0) null else c.get(g)))
     }.toVector

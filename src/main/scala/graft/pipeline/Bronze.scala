@@ -27,9 +27,15 @@ object Bronze {
       .withColumn("date", lit(runDate))
   }
 
+  /** Writer options of the bronze table. Silver reads whole bronze
+    * partitions with no predicate on a data column, so Parquet's per-column
+    * min/max statistics never prune a bronze file; without them each of the
+    * small files a landing adds is smaller. */
+  private val writeOptions = Map("parquet.column.statistics.enabled" -> "false")
+
   /** Land a batch: append-only, partitioned by (city, date). */
   def write(df: DataFrame, root: String): Unit =
-    ParquetLake.appendPartitions(df, root, Schemas.partition.fieldNames.toSeq)
+    ParquetLake.appendPartitions(df, root, Schemas.partition.fieldNames.toSeq, writeOptions)
 
   def run(spark: SparkSession, raw: Seq[(String, String)], root: String,
           runDate: java.sql.Date): Unit =

@@ -52,10 +52,14 @@ object ParquetLake {
   }
 
   /** Entries the catalog and [[read]] skip: in-flight `_temporary` output,
-    * `_SUCCESS` markers, checksums and any other `_`/`.`-prefixed name.
-    * Spark's file index skips the same, except `_`-prefixed `col=value`
-    * directories and Parquet summary files. */
-  private def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
+    * `_SUCCESS` markers, checksums, any other `.`-prefixed name and any
+    * other `_`-prefixed name without an `=`. Spark's file index skips the
+    * same, so a `_p=a` partition directory is kept; it also keeps Parquet
+    * summary files, which are not data. */
+  private def hidden(p: Path) = {
+    val name = p.getName
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+  }
 
   /** One leaf directory of a Hive-partitioned table: its partition values in
     * partition-schema order, typed as `collect` returns them (null for
@@ -214,9 +218,16 @@ object ParquetLake {
   }
 
   /** Append new files into the partition layout (bronze raw-landing
-    * semantics, reference bronze.py:12-17). */
-  def appendPartitions(df: DataFrame, root: String, partitionCols: Seq[String]): Unit =
+    * semantics, reference bronze.py:12-17). `options` go to the writer, as
+    * in [[overwritePartitions]]. No `_SUCCESS` marker is written: in a root
+    * that every append commits into, a marker says nothing about any one
+    * append, and each append would rewrite it. [[hidden]] skips a marker
+    * an older write left. */
+  def appendPartitions(df: DataFrame, root: String, partitionCols: Seq[String],
+                       options: Map[String, String] = Map.empty): Unit =
     df.write
+      .options(options)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .partitionBy(partitionCols: _*)
       .mode("append")
       .parquet(root)

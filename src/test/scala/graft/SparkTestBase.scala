@@ -8,7 +8,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM-wide session; suites run forked). */
+import graft.sources.LocalLakeFileSystem
+
+/** Shared session for all suites (one JVM-wide session; suites run forked).
+  * It resolves `file:` paths to [[LocalLakeFileSystem]], as
+  * `GraftSession.builder` does. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -17,6 +21,7 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(LocalLakeFileSystem.sparkConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,6 +1,9 @@
 package graft.pipeline
 
 import java.sql.Date
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -87,22 +90,46 @@ class SilverGoldSpec extends SparkFunSuite {
     assert(gold.map(_.getAs[Double]("avg_temp")).toSeq == Seq(7.0))
   }
 
+  /** Per column of the one data file under `root`: whether it carries
+    * Parquet min/max statistics. */
+  private def columnStatistics(root: String): Seq[Boolean] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = spark.read.parquet(root).inputFiles.toSeq
+    assert(files.size == 1, root)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(files.head), conf))
+    try reader.getFooter.getBlocks.get(0).getColumns.asScala.map { c =>
+      c.getStatistics != null && !c.getStatistics.isEmpty
+    }.toSeq
+    finally reader.close()
+  }
+
   test("gold files carry no column statistics") {
     val root = tmpDir("sgstats")
     writeBronze(spark, Seq(bronzeRow("Delhi", "2026-02-13")), s"$root/data")
     MetadataLedger.ensure(spark, s"$root/meta")
     Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta")
     Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = spark.read.parquet(s"$root/gold").inputFiles.toSeq
-    assert(files.size == 1)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(files.head), conf))
-    try {
-      val cols = reader.getFooter.getBlocks.get(0).getColumns
-      assert(cols.size == 4)
-      cols.forEach(c => assert(c.getStatistics == null || c.getStatistics.isEmpty, c.getPath))
-    } finally reader.close()
+    assert(columnStatistics(s"$root/gold") == Seq.fill(4)(false))
+  }
+
+  test("bronze files carry no column statistics; silver files keep theirs") {
+    val root = tmpDir("sgbstats")
+    Bronze.run(spark, Seq("Delhi" -> apiJson(31.5)), s"$root/data", Date.valueOf("2026-02-13"))
+    MetadataLedger.ensure(spark, s"$root/meta")
+    Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta")
+    assert(columnStatistics(s"$root/data") == Seq.fill(Schemas.bronzePayload.length)(false))
+    assert(columnStatistics(s"$root/silver") == Seq.fill(Schemas.silver.length - 2)(true))
+  }
+
+  test("no layer root holds a _SUCCESS marker") {
+    val conf = Pipeline.Config(tmpDir("sgmarker"), Ingestion.defaultCities.take(2), fullRefreshGold = false)
+    val fetcher = new Ingestion.Fetcher {
+      def fetch(city: Ingestion.City): String = apiJson(12.5)
+    }
+    for (d <- Seq("2026-02-13", "2026-02-14")) Pipeline.run(spark, conf, fetcher, Date.valueOf(d))
+    for (root <- Seq(conf.bronzeRoot, conf.silverRoot, conf.goldRoot))
+      assert(new java.io.File(root).list().toSeq.filterNot(_.contains("=")) == Nil, root)
   }
 
   test("gold aggregate: avg/max/min/count per (city,date)") {

@@ -81,6 +81,16 @@ class CompactionSpec extends SparkFunSuite {
     assert(got == Seq((1L, None), (2L, None), (3L, Some("a")), (4L, Some("a"))))
   }
 
+  test("a partition column named with a leading underscore is compacted") {
+    import spark.implicits._
+    val root = tmpDir("compact8") + "/data"
+    val rows = Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b"))
+    rows.foreach(r => Seq(r).toDF("id", "_p").write.mode("append").partitionBy("_p").parquet(root))
+    val (before, after) = ParquetLake.compactPartitions(spark, root, Seq("_p"))
+    assert(before == 4 && after == 2, s"$before -> $after")
+    assert(spark.read.parquet(root).as[(Long, String)].collect().sorted.toSeq == rows)
+  }
+
   test("a type only Spark's stored footer schema records survives compaction") {
     val root = tmpDir("compact6") + "/data"
     Seq("a", "B").foreach { n =>

@@ -92,6 +92,18 @@ class PartitionCatalogSpec extends SparkFunSuite {
     }
   }
 
+  test("a partition column named with a leading underscore is listed, as Spark lists it") {
+    val l = Layout(StructType(Seq(StructField("_p", StringType))), Seq(Row("a"), Row("b")))
+    val root = table(l, Seq(1L -> Row("a"), 2L -> Row("b")))
+    assert(new File(root, "_SUCCESS").exists()) // still hidden: no `=` in its name
+    val dirs = ParquetLake.partitionDirs(spark, root, l.parts)
+    assert(dirs.map(_.values).toSet == l.keys.toSet)
+    val spark0 = spark.read.parquet(root)
+    assert(readAll(l, root, dirs) == spark0.collect().toSet)
+    val ours = ParquetLake.read(spark, root)
+    assert(ours.schema == spark0.schema && ours.collect().toSet == spark0.collect().toSet)
+  }
+
   test("a missing root throws; an off-layout directory fails loudly") {
     val base = tmpDir("catalog")
     for (l <- layouts) {
