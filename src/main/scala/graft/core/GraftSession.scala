@@ -13,11 +13,6 @@ import graft.sources.LocalLakeFileSystem
   * timestamp semantics match the DuckDB oracle. `file:` paths resolve to
   * [[graft.sources.LocalLakeFileSystem]], which sets the mode of each file
   * it writes without forking `chmod`.
-  *
-  * Note: writers in [[graft.sources.ParquetLake]] pass
-  * `partitionOverwriteMode=dynamic` per-write, so correctness does not
-  * depend on callers using this builder (the driver's Verify/Bench mains
-  * build their own sessions).
   */
 object GraftSession {
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
@@ -30,7 +25,6 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.ui.enabled", "false")
       .config(LocalLakeFileSystem.sparkConf)
 

@@ -11,7 +11,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{LocalFileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetReader
@@ -110,15 +110,18 @@ object MetadataLedger {
     * vanishes before it is read was merged into a file published since, so
     * the listing is taken again. */
   private def snapshot(spark: SparkSession, path: String): (Seq[Path], Seq[Row]) = {
-    val dir = new Path(path)
-    val names = fs(spark, path) match {
-      // the local listStatus stats each name and silently drops one deleted
-      // meanwhile, hiding both it and a superset renamed in after the
-      // directory read; the bare directory read sees one or the other
-      case local: LocalFileSystem => Option(local.pathToFile(dir).list()).toSeq.flatten
-      case hfs => try hfs.listStatus(dir).toSeq.map(_.getPath.getName)
-                  catch { case _: FileNotFoundException => Nil }
-    }
+    val hfs = fs(spark, path)
+    val dir = hfs.makeQualified(new Path(path))
+    // a local listStatus stats each name and silently drops one deleted
+    // meanwhile, hiding both it and a superset renamed in after the
+    // directory read; the bare directory read sees one or the other. Chosen
+    // by scheme, not by class: whatever class a session resolves `file:` to
+    // (Hive's ProxyLocalFileSystem is not a LocalFileSystem) lists the same
+    // local directory.
+    val names =
+      if (dir.toUri.getScheme == "file") Option(new java.io.File(dir.toUri).list()).toSeq.flatten
+      else try hfs.listStatus(dir).toSeq.map(_.getPath.getName)
+           catch { case _: FileNotFoundException => Nil }
     val files = names.filterNot(n => n.startsWith("_") || n.startsWith(".")).map(new Path(dir, _))
     onStepForTest("listed")
     // a vanished file surfaces as either exception, its checksum file's too

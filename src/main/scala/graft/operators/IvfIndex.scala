@@ -234,14 +234,7 @@ object IvfIndex {
     * serves IDENTICAL results ([[IvfIndexSpec]] pins it). */
   def saveIndex(cents: DataFrame, indexed: DataFrame, path: String): Unit = {
     cents.write.mode("overwrite").parquet(s"$path/centroids")
-    // STATIC overwrite, explicitly: the session default is dynamic (the
-    // right mode for incremental layers), but an index REBUILD must
-    // truncate the whole postings tree — under dynamic mode a rebuild
-    // with fewer/different cells would leave a prior run's cell_id=N
-    // directories on disk, where they stay probe-reachable (silent wrong
-    // results) and poison cellLoad/splitCell audits.
     indexed.write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
       .partitionBy("cell_id")
       .parquet(s"$path/postings")
   }
@@ -369,15 +362,15 @@ object IvfIndex {
     val reassigned = assignCells(hot, sub, "c_vec")
       .select(col("neighbor_id"), col("c_vec"), col("c_norm"),
         col("cell_id"))
-    graft.sources.ParquetLake.overwritePartitionsStaged(spark, reassigned,
+    graft.sources.ParquetLake.overwritePartitions(reassigned,
       s"$path/postings", Seq("cell_id"))
     val hfs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     hfs.delete(
       new org.apache.hadoop.fs.Path(s"$path/postings/cell_id=$cellId"), true)
-    graft.sources.ParquetLake.atomicReplace(spark,
+    graft.sources.ParquetLake.overwritePartitions(
       cents.filter(col("cell_id") =!= cellId).unionByName(sub),
-      s"$path/centroids")
+      s"$path/centroids", Nil)
     newIds
   }
 
@@ -457,7 +450,7 @@ object IvfIndex {
       .filter(col("cell_id").cast("int").isin(targetIds.map(Integer.valueOf): _*))
       .select(col("neighbor_id"), col("c_vec"), col("c_norm"),
         col("cell_id").cast("int").as("cell_id"))
-    graft.sources.ParquetLake.overwritePartitionsStaged(spark,
+    graft.sources.ParquetLake.overwritePartitions(
       existing.unionByName(received), s"$path/postings", Seq("cell_id"))
     val hfs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -465,9 +458,9 @@ object IvfIndex {
       hfs.delete(
         new org.apache.hadoop.fs.Path(s"$path/postings/cell_id=$id"), true)
     }
-    graft.sources.ParquetLake.atomicReplace(spark,
+    graft.sources.ParquetLake.overwritePartitions(
       cents.filter(!col("cell_id").isin(lightIds.map(Integer.valueOf): _*)),
-      s"$path/centroids")
+      s"$path/centroids", Nil)
     lightIds
   }
 

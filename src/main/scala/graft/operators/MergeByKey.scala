@@ -19,10 +19,9 @@ import graft.sources.ParquetLake
   * string partition `007` is merged back into `007`, not into a new `7`.
   * The table's columns must be the updates' columns; a merge that would
   * drop or add one throws before any live file moves. The rewrite is
-  * published through [[ParquetLake.overwritePartitionsStaged]]
-  * (crash-safe per-partition rename swap — NOT dynamic partition overwrite,
-  * whose delete-then-publish commit can destroy a partition's prior rows
-  * mid-crash); untouched partitions are never opened. The merge itself is
+  * published through [[ParquetLake.overwritePartitions]], whose staged
+  * per-partition swap leaves every partition fully old or fully new after a
+  * crash; untouched partitions are never opened. The merge itself is
   * a PK-replace (union → row_number keeping the preferred row per key), run
   * as a Spark job because data tables, unlike the partition ledger
   * (MetadataLedger.upsert, merged on the driver), do not fit on the driver.
@@ -64,7 +63,7 @@ object MergeByKey {
       root + ".updates-" + java.util.UUID.randomUUID().toString)
     val hfs = updStaging.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      updates.write.parquet(updStaging.toString)
+      ParquetLake.awaitTasksOnFailure(spark, updStaging)(updates.write.parquet(updStaging.toString))
       // explicit schema: an all-empty updates write may produce zero part
       // files, which schema inference would reject
       val u = spark.read.schema(updates.schema).parquet(updStaging.toString)
@@ -93,14 +92,11 @@ object MergeByKey {
         .withColumn("_rn", row_number().over(w))
         .filter(col("_rn") === 1)
         .drop("_rn", "_src")
-      // staged swap, not dynamic overwrite: a crash inside
-      // dynamic-overwrite's delete-then-publish commit would destroy the
-      // partition's prior rows — a replayed merge would then read the
-      // half-destroyed state and persist the loss. The staged write also
-      // fully materializes `merged` (from the intact table + the staged
-      // updates file) BEFORE any live file moves, so no separate
-      // checkpoint of the merge result is needed.
-      ParquetLake.overwritePartitionsStaged(spark, merged, root, partitionCols)
+      // the staged write fully materializes `merged` (from the intact table
+      // + the staged updates file) BEFORE any live file moves, so no
+      // separate checkpoint of the merge result is needed, and a replayed
+      // merge after a crash reads whole partitions only
+      ParquetLake.overwritePartitions(merged, root, partitionCols)
       touched.size.toLong
     } finally {
       hfs.delete(updStaging, true)

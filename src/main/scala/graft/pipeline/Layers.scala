@@ -49,8 +49,8 @@ object Layers {
 
   /** One incremental run of `layer`: read the source partitions of `srcRoot`
     * pending for it ([[pendingDirs]]), `transform` them as one batch, write
-    * the result into `dstRoot` by dynamic partition overwrite (with the
-    * writer `writeOptions`), validate, and stamp the pending keys in the
+    * the result into `dstRoot` with [[ParquetLake.overwritePartitions]] (with
+    * the writer `writeOptions`), validate, and stamp the pending keys in the
     * ledger. Returns the number of partitions processed and stamped.
     *
     * Validation rides the write: one Spark `Observation` on the batch

@@ -5,6 +5,7 @@ import java.io.FileNotFoundException
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -17,10 +18,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Mirrors the reference's storage surface (Hive-partitioned Parquet read
   * via glob with `hive_partitioning=true`, per-partition `COPY ... OVERWRITE
   * TRUE` writes — reference silver.py:36,50-54, gold.py:78,86-90) with the
-  * Spark-native equivalents: automatic partition discovery on read and
-  * *dynamic* partition overwrite on write. Dynamic mode is load-bearing:
-  * Spark's default overwrite truncates the whole root directory, which would
-  * silently delete sibling partitions on an incremental rerun.
+  * Spark-native equivalents: automatic partition discovery on read and, on
+  * write, one staged per-partition swap ([[overwritePartitions]]) that
+  * replaces only the partitions written. Spark's own overwrite would not do:
+  * its default mode truncates the whole root, deleting sibling partitions on
+  * an incremental rerun, and its dynamic mode deletes a partition's old files
+  * before it publishes the new ones.
   */
 object ParquetLake {
 
@@ -147,74 +150,84 @@ object ParquetLake {
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Overwrite only the partitions present in `df`, leaving siblings
-    * untouched (DuckDB `OVERWRITE TRUE` per-partition COPY semantics).
-    * `options` go to the writer (and through it to the Parquet writer's
-    * Hadoop configuration). */
+    * untouched (DuckDB `OVERWRITE TRUE` per-partition COPY semantics); with
+    * no `partitionCols` the root is the one partition, so the whole table is
+    * replaced. `options` go to the writer (and through it to the Parquet
+    * writer's Hadoop configuration).
+    *
+    * `df` is written whole to a sibling `<root>.staging-<uuid>`, whose leaf
+    * directories (listed by [[partitionDirs]]) are then swapped into `root`
+    * one at a time: the live leaf is renamed aside to `<root>.aside-<uuid>`,
+    * the staged leaf renamed in, and the aside deleted. The write ends
+    * before any live file moves, so `df` may read `root` itself; after a
+    * crash every leaf is either fully old or fully new (an old leaf caught
+    * between the renames is under the aside directory). Both siblings are
+    * deleted whether the publish succeeds or fails, except an aside leaf
+    * that could not be put back. */
   def overwritePartitions(df: DataFrame, root: String, partitionCols: Seq[String],
-                          options: Map[String, String] = Map.empty): Unit =
-    df.write
-      .options(options)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .mode("overwrite")
-      .parquet(root)
-
-  /** Crash-safe partition overwrite: stage the whole write to a sibling
-    * directory, then swap each written partition into the live table via
-    * rename-aside → rename-in → delete (the [[compactPartitions]] publish
-    * protocol). Dynamic-overwrite's job commit deletes a partition's old
-    * files before publishing the new ones, so a crash mid-commit loses the
-    * partition's prior rows — fatal for read-modify-write callers like
-    * [[graft.operators.MergeByKey]], whose replay would then read the
-    * half-destroyed state. Here every partition is either fully old or
-    * fully new after a crash (worst case: moved aside under the staging
-    * dir, recoverable by hand). Costs two renames per touched partition
-    * over the plain dynamic overwrite. */
-  def overwritePartitionsStaged(spark: SparkSession, df: DataFrame, root: String,
-                                partitionCols: Seq[String]): Unit =
-    if (partitionCols.isEmpty) {
-      // no partitions → "overwrite the touched partitions" degenerates to a
-      // whole-table replace; atomicReplace is the crash-safe form of that
-      // (publishStaged's per-partition swap needs ≥1 partition level)
-      atomicReplace(spark, df, root)
-    } else {
-      val hfs = fs(spark, root)
-      val staging = new Path(root + ".staging-" + System.nanoTime())
-      df.write.partitionBy(partitionCols: _*).parquet(staging.toString)
-      publishStaged(hfs, staging, root, partitionCols.length)
-    }
-
-  /** Swap every depth-level partition dir under `staging` into `root` with
-    * rename-aside → rename-in → delete old, then drop the staging dir (and
-    * the asides with it). A crash between steps leaves the partition
-    * recoverable, unlike delete-then-rename. The aside dir lives OUTSIDE
-    * the table root: an aside left inside the root would be discovered as
-    * a bogus Hive partition and double every read of that partition. */
-  private def publishStaged(hfs: org.apache.hadoop.fs.FileSystem, staging: Path,
-                            root: String, depth: Int): Unit = {
-    def leafDirs(p: Path, d: Int): Seq[Path] =
-      if (d == 0) Seq(p)
-      else hfs.listStatus(p).filter(_.isDirectory)
-        .flatMap(s => leafDirs(s.getPath, d - 1)).toSeq
-    val stagingRoot = hfs.getFileStatus(staging).getPath
-    val asideRoot = new Path(staging, ".aside")
-    leafDirs(stagingRoot, depth).foreach { newDir =>
-      val rel = newDir.toString.stripPrefix(stagingRoot.toString).stripPrefix("/")
-      val target = new Path(root, rel)
-      val aside = new Path(asideRoot, rel)
-      val hadOld = hfs.exists(target)
-      if (hadOld) {
-        hfs.mkdirs(aside.getParent)
-        if (!hfs.rename(target, aside))
-          throw new IllegalStateException(s"cannot move aside partition $rel")
+                          options: Map[String, String] = Map.empty): Unit = {
+    val spark = df.sparkSession
+    val hfs = fs(spark, root)
+    val id = java.util.UUID.randomUUID()
+    val table = hfs.makeQualified(new Path(root))
+    val staging = new Path(s"$table.staging-$id")
+    val aside = new Path(s"$table.aside-$id")
+    var stranded = false
+    try {
+      awaitTasksOnFailure(spark, staging)(
+        df.write.options(options).partitionBy(partitionCols: _*).parquet(staging.toString))
+      val leaves = partitionDirs(spark, staging.toString,
+        StructType(partitionCols.map(StructField(_, StringType))))
+      for (leaf <- leaves) {
+        val rel = leaf.path.stripPrefix(staging.toString).stripPrefix("/")
+        def under(base: Path) = if (rel.isEmpty) base else new Path(base, rel)
+        val (target, old) = (under(table), under(aside))
+        val hadOld = hfs.exists(target)
+        if (hadOld) {
+          hfs.mkdirs(old.getParent)
+          if (!hfs.rename(target, old)) throw new IllegalStateException(s"cannot move aside $target")
+        }
+        hfs.mkdirs(target.getParent)
+        if (!hfs.rename(new Path(leaf.path), target)) {
+          stranded = hadOld && !hfs.rename(old, target)
+          throw new IllegalStateException(
+            s"cannot publish $target" + (if (stranded) s"; its previous files are at $old" else ""))
+        }
       }
-      hfs.mkdirs(target.getParent)
-      if (!hfs.rename(newDir, target)) {
-        if (hadOld) hfs.rename(aside, target) // roll back
-        throw new IllegalStateException(s"cannot publish partition $rel")
-      }
+    } finally {
+      hfs.delete(staging, true)
+      if (!stranded) hfs.delete(aside, true)
     }
-    hfs.delete(staging, true) // removes the .aside copies too
+  }
+
+  /** Runs `write`, a Spark write into the new directory `dir`, and when it
+    * fails rethrows only once none of its tasks runs any more (or after a
+    * minute): a failed job returns while its other tasks still run, and one
+    * of them can create files under `dir` after the caller has deleted it.
+    * Spark's status store learns of jobs and tasks through its listener bus,
+    * after the fact, so a job is waited for until the store records its end,
+    * and, once `dir` exists (the write had begun), until the store knows of
+    * a job at all. */
+  private[graft] def awaitTasksOnFailure(spark: SparkSession, dir: Path)(write: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-write-${java.util.UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try write
+    catch {
+      case e: Exception =>
+        val tracker = sc.statusTracker
+        val started = fs(spark, dir.toString).exists(dir)
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        def running = {
+          val jobs = tracker.getJobIdsForTag(tag).toSeq.flatMap(tracker.getJobInfo(_))
+          (started && jobs.isEmpty) || jobs.exists { j =>
+            j.status == JobExecutionStatus.RUNNING ||
+              j.stageIds.exists(tracker.getStageInfo(_).exists(_.numActiveTasks > 0))
+          }
+        }
+        while (running && System.nanoTime() < deadline) Thread.sleep(10)
+        throw e
+    } finally sc.removeJobTag(tag)
   }
 
   /** Append new files into the partition layout (bronze raw-landing
@@ -250,10 +263,11 @@ object ParquetLake {
     *    partition, however large);
     *  - rows are salted `pmod(hash(data cols), nFiles)` so each partition
     *    splits into its own right-sized file set;
-    *  - output is staged to a sibling directory and swapped in per
-    *    partition: never overwriting the path being lazily read (Spark
-    *    forbids it, and bypassing that check would drop data), and a crash
-    *    mid-swap leaves every partition either old or fully new. */
+    *  - output is published by [[overwritePartitions]], whose staged write
+    *    ends before the path being lazily read changes (Spark forbids
+    *    overwriting it in place, and bypassing that check would drop data),
+    *    and a crash mid-swap leaves every partition either old or fully new.
+    *    An unpartitioned table is its one partition. */
   def compactPartitions(spark: SparkSession, root: String,
                         partitionCols: Seq[String],
                         targetBytes: Long = 128L * 1024 * 1024): (Long, Long) = {
@@ -271,65 +285,25 @@ object ParquetLake {
     val dataCols = df.columns.filterNot(partitionCols.contains).toSeq
     val totalRows = df.count()
     if (totalRows == 0) return (before, before)
-    if (partitionCols.isEmpty) {
-      // unpartitioned table: per-partition staging/swap degenerates to a
-      // whole-table replace (publishStaged's relative-path walk needs ≥1
-      // partition level, and the data-column salt is pointless with one
-      // file group) — right-size with a plain repartition + atomic swap
-      val nFiles = math.max(1L, totalBytes / math.max(targetBytes, 1L) + 1L)
-        .min(Int.MaxValue.toLong).toInt
-      atomicReplace(spark, df.repartition(nFiles), root)
-      return (before, fileCount())
-    }
-    val bytesPerRow = math.max(1.0, totalBytes.toDouble / totalRows)
-    val keys = partitionCols.indices.map(i => s"_key$i")
-    val stats = df.groupBy(partitionCols.zip(keys).map { case (c, k) => col(c).as(k) }: _*)
-      .agg(count(lit(1)).as("_rows"))
-      .withColumn("_nfiles",
-        greatest(lit(1L), ceil(col("_rows") * bytesPerRow / targetBytes)))
-      .drop("_rows")
-    // null-safe: a __HIVE_DEFAULT_PARTITION__ directory reads back as a null key
-    val onKeys = partitionCols.zip(keys).map { case (c, k) => col(c) <=> col(k) }.reduce(_ && _)
-    val salted = df.join(broadcast(stats), onKeys).drop(keys: _*)
-      .withColumn("_salt", pmod(xxhash64(dataCols.map(col): _*), col("_nfiles")))
     val nTasks = math.max(1, math.min(Int.MaxValue.toLong, totalBytes / math.max(targetBytes, 1L) + 1).toInt)
-    val staging = new Path(root + ".compacting-" + System.nanoTime())
-    salted.repartition(nTasks, (partitionCols :+ "_salt").map(col): _*)
-      .drop("_salt", "_nfiles")
-      .write.partitionBy(partitionCols: _*).parquet(staging.toString)
-    publishStaged(fs(spark, root), staging, root, partitionCols.length)
-    (before, fileCount())
-  }
-
-  /** Full-table atomic replace via write-temp-then-swap, for whole-table
-    * rewrites (unpartitioned compaction and staged overwrite, the IVF index)
-    * where a plain read-modify-write could expose a half-written table to
-    * concurrent readers (SURVEY §7.4 item 2).
-    *
-    * The new content is materialized under `<root>.staging-<nanos>`, the old
-    * root is renamed aside, the staging dir renamed in, and the old data
-    * deleted. Renames are atomic per filesystem (HDFS/posix), so readers
-    * never see HALF-written data — but there is a sub-millisecond window
-    * between the two renames where the path does not exist at all, and a
-    * crash in it leaves the table only under `<root>.old-<nanos>`; a caller
-    * must not read a missing root as an empty table.
-    * On object stores a table format would be the real answer — out of
-    * scope here.
-    */
-  def atomicReplace(spark: SparkSession, df: DataFrame, root: String): Unit = {
-    val hfs = fs(spark, root)
-    val target = new Path(root)
-    val staging = new Path(root + ".staging-" + System.nanoTime())
-    val trash = new Path(root + ".old-" + System.nanoTime())
-    df.write.mode("overwrite").parquet(staging.toString)
-    if (hfs.exists(target) && !hfs.rename(target, trash))
-      throw new IllegalStateException(s"cannot move aside $target")
-    if (!hfs.rename(staging, target)) {
-      // roll back so readers still see the previous table
-      if (hfs.exists(trash)) hfs.rename(trash, target)
-      throw new IllegalStateException(s"cannot publish $staging to $target")
+    // an unpartitioned table is one file group: a plain repartition sizes it
+    val out = if (partitionCols.isEmpty) df.repartition(nTasks) else {
+      val bytesPerRow = math.max(1.0, totalBytes.toDouble / totalRows)
+      val keys = partitionCols.indices.map(i => s"_key$i")
+      val stats = df.groupBy(partitionCols.zip(keys).map { case (c, k) => col(c).as(k) }: _*)
+        .agg(count(lit(1)).as("_rows"))
+        .withColumn("_nfiles",
+          greatest(lit(1L), ceil(col("_rows") * bytesPerRow / targetBytes)))
+        .drop("_rows")
+      // null-safe: a __HIVE_DEFAULT_PARTITION__ directory reads back as a null key
+      val onKeys = partitionCols.zip(keys).map { case (c, k) => col(c) <=> col(k) }.reduce(_ && _)
+      df.join(broadcast(stats), onKeys).drop(keys: _*)
+        .withColumn("_salt", pmod(xxhash64(dataCols.map(col): _*), col("_nfiles")))
+        .repartition(nTasks, (partitionCols :+ "_salt").map(col): _*)
+        .drop("_salt", "_nfiles")
     }
-    if (hfs.exists(trash)) hfs.delete(trash, true)
+    overwritePartitions(out, root, partitionCols)
+    (before, fileCount())
   }
 
   /** Range-sorted layout writer: `nFiles` files with DISJOINT, ordered

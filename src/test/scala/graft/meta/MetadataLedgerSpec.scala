@@ -4,6 +4,7 @@ import java.io.File
 import java.sql.{Date, Timestamp}
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch}
 
+import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.Row
 
 import graft.SparkFunSuite
@@ -131,6 +132,21 @@ class MetadataLedgerSpec extends SparkFunSuite {
     assert(visible(p).size == 1)
   }
 
+  test("a file: path takes the bare directory read whatever class serves the scheme") {
+    val p = tmpDir("mlscheme") + "/meta"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache").map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[MetadataLedgerSpec.NoListingFileSystem].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    try {
+      assert(graft.sources.ParquetLake.fs(spark, p).isInstanceOf[MetadataLedgerSpec.NoListingFileSystem])
+      MetadataLedger.upsert(spark, p, "silver", Seq(key("Delhi", "2026-02-13")))
+      MetadataLedger.upsert(spark, p, "silver", Seq(key("London", "2026-02-13")))
+      assert(cities(p) == Seq("Delhi", "London"))
+    } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    assert(visible(p).size == 1)
+  }
+
   test("four writers racing: every upsert succeeds and no row is lost") {
     (1 to 10).foreach { round =>
       val p = tmpDir("mlrace") + "/meta"
@@ -170,5 +186,15 @@ class MetadataLedgerSpec extends SparkFunSuite {
       assert(got.map(r => (r.getString(0), r.getString(1), r.getDate(2).toString)).toSet == expectKeys)
       assert(got.size == expectKeys.size)
     }
+  }
+}
+
+object MetadataLedgerSpec {
+
+  /** A `file:` file system that is not a `LocalFileSystem`, as Hive's
+    * `ProxyLocalFileSystem` is not, and whose `listStatus` throws. */
+  class NoListingFileSystem extends FilterFileSystem(new LocalFileSystem) {
+    override def listStatus(f: Path): Array[FileStatus] =
+      throw new UnsupportedOperationException(s"listStatus($f)")
   }
 }

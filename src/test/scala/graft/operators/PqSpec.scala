@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.SparkFunSuite
+import graft.core.GraftSession
 import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 class PqSpec extends SparkFunSuite {
@@ -134,6 +136,29 @@ class PqSpec extends SparkFunSuite {
     // meta round-trips so a mis-parameterized serve cannot mis-slice
     val meta = spark.read.parquet(s"$dir/meta").collect()(0)
     assert((meta.getInt(0), meta.getInt(1)) == (64, 4))
+  }
+
+  test("saving over a larger index leaves only the new cells") {
+    // through a session built by GraftSession.builder, isolated from the
+    // shared test session's settings
+    val iso = spark.newSession()
+    SparkSession.setActiveSession(iso)
+    SparkSession.setDefaultSession(iso)
+    try {
+      val s = GraftSession.builder().getOrCreate()
+      assert(s eq iso)
+      val corpus = Tables(s, t.dir).embeddings
+      val dir = tmpDir("ivfpqresave")
+      def cells() = new java.io.File(s"$dir/codes").list().filter(_.startsWith("cell_id=")).toSeq
+      Pq.saveIvfPqIndex(dir, corpus, "vec_id", "embedding", dim = 64, m = 4, kCells = 16, nCells = 8)
+      assert(cells().size == 8)
+      Pq.saveIvfPqIndex(dir, corpus, "vec_id", "embedding", dim = 64, m = 4, kCells = 16, nCells = 2)
+      assert(cells().sorted == Seq("cell_id=0", "cell_id=1"))
+      assert(s.read.parquet(s"$dir/codes").select("cell_id").distinct().count() == 2)
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
   }
 
   test("topKFromIvf: invalid nProbe/dim rejected") {

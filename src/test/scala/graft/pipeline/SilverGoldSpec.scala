@@ -132,6 +132,20 @@ class SilverGoldSpec extends SparkFunSuite {
       assert(new java.io.File(root).list().toSeq.filterNot(_.contains("=")) == Nil, root)
   }
 
+  test("a fullRefresh gold rewrite leaves only city= directories and nothing beside the root") {
+    val root = tmpDir("sgrefresh")
+    writeBronze(spark, Seq(bronzeRow("Delhi", "2026-02-13"), bronzeRow("London", "2026-02-13")),
+      s"$root/data")
+    MetadataLedger.ensure(spark, s"$root/meta")
+    Silver.run(spark, s"$root/data", s"$root/silver", s"$root/meta")
+    assert(Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta") == 2)
+    val first = spark.read.parquet(s"$root/gold").orderBy("city").collect().toSeq
+    assert(Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta", fullRefresh = true) == 2)
+    assert(spark.read.parquet(s"$root/gold").orderBy("city").collect().toSeq == first)
+    assert(new java.io.File(s"$root/gold").list().toSeq.sorted == Seq("city=Delhi", "city=London"))
+    assert(new java.io.File(root).list().toSeq.sorted == Seq("data", "gold", "meta", "silver"))
+  }
+
   test("gold aggregate: avg/max/min/count per (city,date)") {
     val df = Silver.transform(bronzeDf(spark, Seq(
       bronzeRow("Delhi", "2026-02-13", hour = 9, temp = 30.0),
