@@ -6,8 +6,8 @@ import graft.sources.LocalLakeFileSystem
 
 /** Canonical session factory for the graft engine.
   *
-  * Defaults are sized for the harness host (local[32], 128 GiB) but every
-  * knob is the one you'd set on a real cluster too: AQE on (runtime
+  * `master` defaults to every local core; `shufflePartitions` to 32. Every
+  * other knob is the one you'd set on a real cluster too: AQE on (runtime
   * re-planning + skew-join splitting), shuffle partitions matched to
   * parallelism instead of the 200 default, UTC session timezone so
   * timestamp semantics match the DuckDB oracle. `file:` paths resolve to

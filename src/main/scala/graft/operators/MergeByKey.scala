@@ -13,10 +13,11 @@ import graft.sources.ParquetLake
   *
   * Scale shape: only the Hive partitions that contain updated keys are
   * read+rewritten. They are found with the driver-side partition catalog
-  * ([[ParquetLake.partitionDirs]], no listing job) and read with the updates'
-  * schema declared ([[ParquetLake.readPartitions]]), so partition values are
-  * cast from the directory names to the updates' types, never inferred: a
-  * string partition `007` is merged back into `007`, not into a new `7`.
+  * ([[ParquetLake.catalog]], no listing job; only touched leaves are
+  * listed) and read with the updates' schema declared
+  * ([[ParquetLake.readPartitions]]), so partition values are cast from the
+  * directory names to the updates' types, never inferred: a string
+  * partition `007` is merged back into `007`, not into a new `7`.
   * The table's columns must be the updates' columns; a merge that would
   * drop or add one throws before any live file moves. The rewrite is
   * published through [[ParquetLake.overwritePartitions]], whose staged
@@ -69,20 +70,22 @@ object MergeByKey {
       val u = spark.read.schema(updates.schema).parquet(updStaging.toString)
       val touched = u.select(partitionCols.map(col): _*).distinct().collect().toSet
       if (touched.isEmpty) return 0L
-      // an unpartitioned table is the catalog's depth-0 case: its root is its one leaf
+      // an unpartitioned table is the catalog's depth-0 case: its root is its
+      // one leaf. Only the touched leaves are listed (a depth mismatch throws
+      // then), and the first leaf holding a file, for the column check.
       val dirs =
         if (!ParquetLake.exists(spark, root)) Nil
-        else ParquetLake.partitionDirs(spark, root, StructType(partitionCols.map(u.schema(_))))
+        else ParquetLake.catalog(spark, root, Some(StructType(partitionCols.map(u.schema(_)))))
+      val touchedDirs = dirs.filter(d => touched.contains(d.values) && d.files.nonEmpty)
       // the declared-schema read would silently drop a table column the
       // updates lack, and null-fill one the table lacks: refuse both
-      dirs.headOption.foreach { d =>
-        val tableCols = ParquetLake.fileSchema(spark, d.files.head).fieldNames.toSet
+      (touchedDirs.iterator ++ dirs.iterator).flatMap(_.files).nextOption().foreach { f =>
+        val tableCols = ParquetLake.fileSchema(spark, f).fieldNames.toSet
         val updateCols = u.columns.toSet -- partitionCols
         require(tableCols == updateCols,
           s"updates columns $updateCols differ from table $root columns $tableCols")
       }
-      val existing = ParquetLake.readPartitions(spark, root, u.schema,
-        dirs.filter(d => touched.contains(d.values)).map(_.path))
+      val existing = ParquetLake.readPartitions(spark, root, u.schema, touchedDirs)
       val ord =
         if (versionCol.isEmpty) Seq(col("_src").desc)
         else Seq(col(versionCol).desc, col("_src").desc)

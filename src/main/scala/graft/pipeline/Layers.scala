@@ -12,12 +12,14 @@ import graft.sources.ParquetLake
   * gold.py:104-125).
   *
   * Enumeration and diff run on the driver: the source layer's
-  * `city=<c>/date=<d>` leaf directories come from [[ParquetLake.partitionDirs]]
-  * (plain directory listings, no Spark job), and the ledger's processed
-  * (city, date) keys are read on the driver and subtracted as a set — the
-  * reference's own driver-side set difference (silver.py:69, gold.py:118).
-  * Both sides are partition-granular, so they stay small however many rows
-  * the lake holds. Only the pending leaf directories are then read.
+  * `city=<c>/date=<d>` leaf directories come from [[ParquetLake.catalog]]
+  * (plain directory listings of the name levels, no Spark job), and the
+  * ledger's processed (city, date) keys are read on the driver and
+  * subtracted as a set — the reference's own driver-side set difference
+  * (silver.py:69, gold.py:118). Both sides are partition-granular, so they
+  * stay small however many rows the lake holds. Only the pending leaf
+  * directories are then listed and read, so a cycle's listing does not grow
+  * with the lake's history.
   *
   * Deliberate departure from the reference, noted in BASELINE.md: instead of
   * one engine invocation per pending partition (pathological in Spark — a
@@ -36,15 +38,19 @@ object Layers {
     * the ledger has not recorded for `layer` — every one of them on a
     * `fullRefresh`. Keys are compared null-safely, so a
     * `__HIVE_DEFAULT_PARTITION__` directory is pending until its null key is
-    * recorded. A missing `root` throws `FileNotFoundException`. */
+    * recorded. Only the pending leaves are listed ([[ParquetLake.catalog]]
+    * lists the name levels), and one that holds no data file is dropped: it
+    * does not exist. A missing `root` throws `FileNotFoundException`. */
   def pendingDirs(spark: SparkSession, root: String, metadataPath: String, layer: String,
                   fullRefresh: Boolean = false): Seq[ParquetLake.PartitionDir] = {
-    val dirs = ParquetLake.partitionDirs(spark, root, Schemas.partition)
-    if (fullRefresh || dirs.isEmpty) dirs
-    else {
-      val done = MetadataLedger.processed(spark, metadataPath, layer)
-      dirs.filterNot(d => done.contains(d.values))
-    }
+    val dirs = ParquetLake.catalog(spark, root, Some(Schemas.partition))
+    val pending =
+      if (fullRefresh || dirs.isEmpty) dirs
+      else {
+        val done = MetadataLedger.processed(spark, metadataPath, layer)
+        dirs.filterNot(d => done.contains(d.values))
+      }
+    pending.filter(_.files.nonEmpty)
   }
 
   /** One incremental run of `layer`: read the source partitions of `srcRoot`
@@ -77,7 +83,7 @@ object Layers {
     val keys = pending.map(_.values)
     val partitionCols = Schemas.partition.fieldNames.toSeq
     val obs = Observation()
-    val batch = transform(ParquetLake.readPartitions(spark, srcRoot, srcSchema, pending.map(_.path)))
+    val batch = transform(ParquetLake.readPartitions(spark, srcRoot, srcSchema, pending))
       .observe(obs, collect_set(struct(partitionCols.map(col): _*)).as("parts"),
         checks.map { case (what, bad) => count(when(bad, 1)).as(what) }: _*)
     ParquetLake.overwritePartitions(batch, dstRoot, partitionCols, writeOptions)

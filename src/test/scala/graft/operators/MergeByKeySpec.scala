@@ -95,13 +95,23 @@ class MergeByKeySpec extends SparkFunSuite {
   test("a failing updates-write leaves no staging directory behind") {
     val root = tmpDir("merge_crash") + "/t"
     table(root)
-    // evaluation of this updates lineage throws when the staging write
-    // runs it — the merge fails before touching any live file
-    val poison = Seq((1L, "p1", 2L, "a-v2")).toDF("id", "part", "version", "payload")
-      .withColumn("payload", raise_error(lit("boom")).cast("string"))
-    intercept[Exception] {
+    // two input files, so the staging write runs two tasks together: one
+    // fails at once, the other writes its row a second later, after its job
+    // has already failed (it spins, so the interrupt that cancels it does
+    // not cut the wait short)
+    val input = tmpDir("merge_input") + "/in"
+    Seq((1L, "p1", 2L, "a-v2")).toDF("id", "part", "version", "payload").write.parquet(input)
+    Seq((2L, "p1", -1L, "b-v2")).toDF("id", "part", "version", "payload")
+      .write.mode("append").parquet(input)
+    val slow = udf { (v: Long) => graft.sources.OverwritePartitionsSpec.spin(); v }
+    val poison = spark.read.parquet(input)
+      .withColumn("version", when($"version" < 0, raise_error(lit("boom"))).otherwise(slow($"version")))
+    val e = intercept[Exception] {
       MergeByKey.merge(spark, root, poison, Seq("id"), Seq("part"), "version")
     }
+    Thread.sleep(2000) // past the late task's write
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")), e)
     val leaked = new File(root).getParentFile.listFiles()
       .filter(_.getName.contains(".updates-"))
     assert(leaked.isEmpty,

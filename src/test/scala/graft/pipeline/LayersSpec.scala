@@ -46,7 +46,7 @@ class LayersSpec extends SparkFunSuite {
       bronzeRow("London", "2026-02-13"), bronzeRow("Delhi", "2026-02-14")),
       done = Seq(key("Delhi", "2026-02-13"), key("London", "2026-02-13")))
     val pending = Layers.pendingDirs(spark, data, meta, Silver.layerName)
-    val out = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending.map(_.path))
+    val out = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending)
     assert(out.select("city", "date").distinct().collect().map(r =>
       (r.getString(0), r.getDate(1).toString)).toSeq == Seq(("Delhi", "2026-02-14")))
   }
@@ -58,7 +58,7 @@ class LayersSpec extends SparkFunSuite {
     val (data, meta) = lake(rows, done)
     val pending = Layers.pendingDirs(spark, data, meta, Silver.layerName)
     assert(pending.size == 260)
-    val scoped = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending.map(_.path))
+    val scoped = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending)
       .collect().toSet
     val doneSet = done.toSet
     val expected = spark.read.schema(Schemas.bronze).parquet(data).collect()
@@ -72,7 +72,7 @@ class LayersSpec extends SparkFunSuite {
       done = Seq(key("Delhi", "2026-02-13")))
     val pending = Layers.pendingDirs(spark, data, meta, Silver.layerName)
     assert(pending.isEmpty)
-    val out = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending.map(_.path))
+    val out = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending)
     assert(out.count() == 0 && out.schema == Schemas.bronze)
   }
 
@@ -81,7 +81,7 @@ class LayersSpec extends SparkFunSuite {
       done = Seq(key("Delhi", "2026-02-13")))
     val pending = Layers.pendingDirs(spark, data, meta, Silver.layerName)
     assert(keysOf(pending) == Set(Row(null, Date.valueOf("2026-02-13"))))
-    val out = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending.map(_.path))
+    val out = ParquetLake.readPartitions(spark, data, Schemas.bronze, pending)
     assert(out.select("city").collect().toSeq == Seq(Row(null)))
     record(meta, Silver.layerName, pending.map(_.values))
     assert(Layers.pendingDirs(spark, data, meta, Silver.layerName).isEmpty)

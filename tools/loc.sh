@@ -9,8 +9,10 @@
 #
 # Groups:
 #   src/main  every .scala file under src/main
-#   pipeline  the pipeline proper: pipeline/, meta/MetadataLedger.scala and
-#             sources/ParquetLake.scala
+#   pipeline  the pipeline proper: pipeline/, meta/MetadataLedger.scala,
+#             sources/ParquetLake.scala, the lake's read index
+#             sources/LakeFileIndex.scala and its bridge into Spark,
+#             org/apache/spark/sql/execution/datasources/GraftFileIndexBridge.scala
 set -euo pipefail
 cd "$(dirname "$0")/.."
 main=src/main/scala/graft
@@ -29,4 +31,6 @@ report() {
 printf '%-9s %7s %7s\n' group lines code
 report src/main $(find src/main -name '*.scala' | sort)
 report pipeline $(find "$main/pipeline" -name '*.scala' | sort) \
-  "$main/meta/MetadataLedger.scala" "$main/sources/ParquetLake.scala"
+  "$main/meta/MetadataLedger.scala" "$main/sources/ParquetLake.scala" \
+  "$main/sources/LakeFileIndex.scala" \
+  src/main/scala/org/apache/spark/sql/execution/datasources/GraftFileIndexBridge.scala
