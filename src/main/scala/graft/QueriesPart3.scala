@@ -576,8 +576,9 @@ private[graft] trait QueriesPart3 { this: SparkEntry.type =>
     // technique): events keyed by (user bucket, hour bucket) in 10-bit
     // space, 16 closed-form z-ranges — per-range min/max spans of BOTH
     // dimensions prove the layout clusters both (≈ 1/4 each, vs 1/16
-    // and ~1 for a single-column sort). Pair with writeRangeSorted(z)
-    // for the actual write; the audit is the adopt/don't evidence.
+    // and ~1 for a single-column sort). Pair with repartitionByRange(n, z)
+    // .sortWithinPartitions(z) for the actual write; the audit is the
+    // adopt/don't evidence.
     "q281_zorder_audit" -> ((s, dir) => {
       val ev = Tables(s, dir).events
         .filter(col("user_id").isNotNull && col("ts").isNotNull)

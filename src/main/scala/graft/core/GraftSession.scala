@@ -27,10 +27,4 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(LocalLakeFileSystem.sparkConf)
-
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

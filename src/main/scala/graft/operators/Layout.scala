@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * point/range predicates on EITHER column.
   *
   * Write path: compute [[Layout.zValue]], then
-  * [[graft.sources.ParquetLake.writeRangeSorted]] on it — the existing
-  * range-sort machinery IS the optimizer; this file only supplies the
-  * key and the audit that proves the layout pays.
+  * `repartitionByRange(n, z).sortWithinPartitions(z)` before the write —
+  * Spark's range sort IS the optimizer; this file only supplies the key
+  * and the audit that proves the layout pays.
   */
 object Layout {
 

@@ -550,7 +550,7 @@ object Sampling {
     *    stratified low-discrepancy position in (0, 1), integer-derived
     *    with ONE double division (bit-identical cross-engine).
     * The global order is `(progress, groupCol, keyCol)` — materialize it
-    * with [[graft.sources.ParquetLake.writeRangeSorted]] on `progress`
+    * with `repartitionByRange(n, progress).sortWithinPartitions(progress)`
     * (range partition + in-file sort: no single global sort task).
     *
     * Scale shape: one exchange keyed by group for the in-group rank (the

@@ -230,15 +230,6 @@ object ParquetLake {
     finally reader.close()
   }
 
-  /** Read `root` with a declared schema, or an empty DataFrame of that
-    * schema when `root` does not exist yet: a table that only some runs
-    * have written, such as the streaming dedup ledger before its first
-    * batch. Gold's tolerance of a missing silver root (gold.py:26-28)
-    * tests [[exists]] instead. */
-  def readOrEmpty(spark: SparkSession, root: String, schema: StructType): DataFrame =
-    if (exists(spark, root)) spark.read.schema(schema).parquet(root)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
   /** Overwrite only the partitions present in `df`, leaving siblings
     * untouched (DuckDB `OVERWRITE TRUE` per-partition COPY semantics); with
     * no `partitionCols` the root is the one partition, so the whole table is
@@ -327,94 +318,11 @@ object ParquetLake {
     * append, and each append would rewrite it. [[hidden]] skips a marker
     * an older write left. */
   def appendPartitions(df: DataFrame, root: String, partitionCols: Seq[String],
-                       options: Map[String, String] = Map.empty): Unit =
+                       options: Map[String, String]): Unit =
     df.write
       .options(options)
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .partitionBy(partitionCols: _*)
       .mode("append")
       .parquet(root)
-
-  /** Compact a partitioned table's small files toward `targetBytes`-sized
-    * files. Returns (filesBefore, filesAfter).
-    *
-    * The reference's bronze layout lands ONE ROW per file per run
-    * (bronze.py:15-17) — at scale that's the classic small-file pathology
-    * (every scan pays per-file open/footer cost; listings dominate).
-    *
-    * Shape, chosen for correctness at scale:
-    *  - the table is listed with [[partitionDirs]] and read with
-    *    [[readPartitions]], partition columns declared as strings: every row
-    *    is written back under the directory name it came from (an inferred
-    *    type would move `region=007` rows into a new `region=7`);
-    *  - per-Hive-partition output file counts are derived from row counts ×
-    *    the table's measured bytes/row (a bare repartition on the partition
-    *    columns would force exactly one file — and one task — per
-    *    partition, however large);
-    *  - rows are salted `pmod(hash(data cols), nFiles)` so each partition
-    *    splits into its own right-sized file set;
-    *  - output is published by [[overwritePartitions]], whose staged write
-    *    ends before the path being lazily read changes (Spark forbids
-    *    overwriting it in place, and bypassing that check would drop data),
-    *    and a crash mid-swap leaves every partition either old or fully new.
-    *    An unpartitioned table is its one partition. */
-  def compactPartitions(spark: SparkSession, root: String,
-                        partitionCols: Seq[String],
-                        targetBytes: Long = 128L * 1024 * 1024): (Long, Long) = {
-    import org.apache.spark.sql.functions._
-    val partSchema = StructType(partitionCols.map(StructField(_, StringType)))
-    def listing() = partitionDirs(spark, root, partSchema)
-    def fileCount() = listing().map(_.files.size.toLong).sum
-    val dirs = listing()
-    val files = dirs.flatMap(_.files)
-    val before = files.size.toLong
-    if (before == 0) return (0L, 0L)
-    val totalBytes = files.map(_.getLen).sum
-    val df = readPartitions(spark, root,
-      StructType(fileSchema(spark, files.head).fields ++ partSchema.fields), dirs)
-    val dataCols = df.columns.filterNot(partitionCols.contains).toSeq
-    val totalRows = df.count()
-    if (totalRows == 0) return (before, before)
-    val nTasks = math.max(1, math.min(Int.MaxValue.toLong, totalBytes / math.max(targetBytes, 1L) + 1).toInt)
-    // an unpartitioned table is one file group: a plain repartition sizes it
-    val out = if (partitionCols.isEmpty) df.repartition(nTasks) else {
-      val bytesPerRow = math.max(1.0, totalBytes.toDouble / totalRows)
-      val keys = partitionCols.indices.map(i => s"_key$i")
-      val stats = df.groupBy(partitionCols.zip(keys).map { case (c, k) => col(c).as(k) }: _*)
-        .agg(count(lit(1)).as("_rows"))
-        .withColumn("_nfiles",
-          greatest(lit(1L), ceil(col("_rows") * bytesPerRow / targetBytes)))
-        .drop("_rows")
-      // null-safe: a __HIVE_DEFAULT_PARTITION__ directory reads back as a null key
-      val onKeys = partitionCols.zip(keys).map { case (c, k) => col(c) <=> col(k) }.reduce(_ && _)
-      df.join(broadcast(stats), onKeys).drop(keys: _*)
-        .withColumn("_salt", pmod(xxhash64(dataCols.map(col): _*), col("_nfiles")))
-        .repartition(nTasks, (partitionCols :+ "_salt").map(col): _*)
-        .drop("_salt", "_nfiles")
-    }
-    overwritePartitions(out, root, partitionCols)
-    (before, fileCount())
-  }
-
-  /** Range-sorted layout writer: `nFiles` files with DISJOINT, ordered
-    * `orderCol` ranges (repartitionByRange boundaries + an in-partition
-    * sort). The data-layout half of scan pruning: parquet stores per-file
-    * and per-row-group min/max for the sort column, so a range predicate
-    * skips whole files/row groups at read time — the poor engineer's
-    * Z-order for a single dominant filter column (time, id range). The
-    * partition count is the file count; pick `nFiles` ≈ table bytes /
-    * desired file size.
-    *
-    * Boundaries come from Spark's range-exchange SAMPLING, so exact file
-    * boundaries can vary between runs — the CONTRACT (disjointness +
-    * internal order + row preservation) is what holds, and what the spec
-    * pins. NULL order keys sort first into the lowest file (Spark
-    * NULLS FIRST default). */
-  def writeRangeSorted(df: DataFrame, root: String, orderCol: String,
-                       nFiles: Int): Unit = {
-    require(nFiles >= 1, s"nFiles ($nFiles) must be >= 1")
-    df.repartitionByRange(nFiles, org.apache.spark.sql.functions.col(orderCol))
-      .sortWithinPartitions(orderCol)
-      .write.mode("overwrite").parquet(root)
-  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.MergeByKey
+import graft.sources.ParquetLake
 
 /** Structured-Streaming transforms for the events stream.
   *
@@ -333,7 +334,11 @@ object StreamingOps {
     val ledgerSchema = StructType(Seq(
       StructField("fp", StringType), StructField("admit_batch", LongType),
       StructField("fp_shard", StringType)))
-    val ledger = graft.sources.ParquetLake.readOrEmpty(sp, ledgerRoot, ledgerSchema)
+    // the ledger's leaves from the partition catalog; none before the first
+    // batch's merge has created the root, which reads as an empty table
+    val ledger = ParquetLake.readPartitions(sp, ledgerRoot, ledgerSchema,
+      if (!ParquetLake.exists(sp, ledgerRoot)) Nil
+      else ParquetLake.catalog(sp, ledgerRoot, Some(StructType(Seq(ledgerSchema("fp_shard"))))))
     val prior = ledger.filter(col("admit_batch") =!= lit(batchId))
       .select(col("fp").as(fpCol))
     val admitted = graft.operators.IncrementalDedup

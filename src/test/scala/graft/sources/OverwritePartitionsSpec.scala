@@ -16,10 +16,11 @@ class OverwritePartitionsSpec extends SparkFunSuite {
 
   private def table(rows: (String, String, Int)*): DataFrame = rows.toDF("city", "date", "v")
 
-  /** The table's rows; a partition column is read back as an inferred type. */
-  private def rows(root: String): Seq[Row] =
-    spark.read.parquet(root).select($"city", $"date".cast("string"), $"v")
-      .orderBy("city", "date", "v").collect().toSeq
+  /** The table's rows, its first column named `key`; partition columns are
+    * read back as the strings their directory names spell. */
+  private def rows(root: String, key: String = "city"): Seq[Row] =
+    spark.read.schema(s"`$key` STRING, date STRING, v INT").parquet(root)
+      .select(key, "date", "v").orderBy(key, "date", "v").collect().toSeq
 
   /** The names beside `root` in its parent directory. */
   private def siblings(root: String): Seq[String] = {
@@ -28,13 +29,21 @@ class OverwritePartitionsSpec extends SparkFunSuite {
   }
 
   test("depth 2: the written partitions are replaced and the others kept") {
-    val root = tmpDir("owp") + "/t"
-    ParquetLake.overwritePartitions(table(("a", "1", 1), ("a", "2", 2), ("b", "1", 3)), root, nested)
-    ParquetLake.overwritePartitions(table(("a", "2", 20), ("a", "2", 21), ("c", "1", 30)), root, nested)
-    assert(rows(root) == Seq(Row("a", "1", 1), Row("a", "2", 20), Row("a", "2", 21),
-      Row("b", "1", 3), Row("c", "1", 30)))
-    assert(new File(root).list().toSeq.sorted == Seq("city=a", "city=b", "city=c"))
-    assert(siblings(root) == Nil)
+    // the first level as plain names, named with a leading underscore,
+    // zero-padded (`007` must not become `7`) and with a null partition
+    for ((key, a, b, c) <- Seq(("city", "a", "b", "c"), ("_p", "a", "b", "c"),
+                               ("region", "007", "010", "012"), ("city", null, "b", "c"))) {
+      val root = tmpDir("owp") + "/t"
+      def write(rows: (String, String, Int)*): Unit =
+        ParquetLake.overwritePartitions(table(rows: _*).withColumnRenamed("city", key), root, Seq(key, "date"))
+      write((a, "1", 1), (a, "2", 2), (b, "1", 3))
+      write((a, "2", 20), (a, "2", 21), (c, "1", 30))
+      assert(rows(root, key) == Seq(Row(a, "1", 1), Row(a, "2", 20), Row(a, "2", 21),
+        Row(b, "1", 3), Row(c, "1", 30)), key)
+      assert(new File(root).list().toSeq.sorted ==
+        Seq(a, b, c).map(v => s"$key=${Option(v).getOrElse("__HIVE_DEFAULT_PARTITION__")}"), key)
+      assert(siblings(root) == Nil, key)
+    }
   }
 
   test("depth 0: the root is the one partition, so the whole table is replaced") {

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
-import graft.pipeline.{Schemas, Silver}
+import graft.pipeline.{Layers, Schemas, Silver}
 import graft.pipeline.WeatherFixtures._
 
 /** Schema evolution at the landing layer: bronze batches gain a column
@@ -12,15 +12,18 @@ class SchemaEvolutionSpec extends SparkFunSuite {
   import spark.implicits._
 
   test("declared-schema read fills missing columns with null across file vintages") {
-    val root = tmpDir("evo") + "/data"
+    val dir = tmpDir("evo")
+    val root = dir + "/data"
     // vintage 1: the standard bronze payload
     writeBronze(spark, Seq(bronzeRow("Delhi", "2026-02-13")), root)
     // vintage 2: a later batch with an extra sensor column
     bronzeDf(spark, Seq(bronzeRow("London", "2026-02-13")))
       .withColumn("humidity", lit(55.0))
       .write.partitionBy("city", "date").mode("append").parquet(root)
-    // reading with the declared v1 schema: extra column ignored, both vintages load
-    val v1 = ParquetLake.readOrEmpty(spark, root, Schemas.bronze)
+    // silver's read: the pending leaves with the declared v1 schema; the
+    // extra column is ignored and both vintages load
+    val v1 = ParquetLake.readPartitions(spark, root, Schemas.bronze,
+      Layers.pendingDirs(spark, root, dir + "/meta", Silver.layerName))
     assert(v1.count() == 2)
     // silver transform runs over the mixed layout unchanged
     assert(Silver.transform(v1).count() == 2)
