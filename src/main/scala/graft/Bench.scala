@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 object Bench {
 
   /** One benched query's measurement window. `time` is the min of three
@@ -12,11 +13,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def loadavg: Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")(0).toDouble

@@ -26,7 +26,7 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types.{DataType, DateType, StringType, TimestampType}
 
 import graft.pipeline.Schemas
-import graft.sources.ParquetLake.fs
+import graft.sources.ParquetLake.{fs, hidden}
 
 /** Processed-partition ledger: a directory of small Parquet files with
   * logical primary key (layer, city, date) and replace-on-conflict upsert.
@@ -122,7 +122,7 @@ object MetadataLedger {
       if (dir.toUri.getScheme == "file") Option(new java.io.File(dir.toUri).list()).toSeq.flatten
       else try hfs.listStatus(dir).toSeq.map(_.getPath.getName)
            catch { case _: FileNotFoundException => Nil }
-    val files = names.filterNot(n => n.startsWith("_") || n.startsWith(".")).map(new Path(dir, _))
+    val files = names.map(new Path(dir, _)).filterNot(hidden)
     onStepForTest("listed")
     // a vanished file surfaces as either exception, its checksum file's too
     try (files, merge(files.flatMap(readFile(spark.sparkContext.hadoopConfiguration, _)), Nil))

@@ -18,9 +18,9 @@ import graft.sources.ParquetLake
   *    (gold.py:26-28 catches IOException);
   *  - a `fullRefresh` switch recomputes every available partition, ignoring
   *    the ledger diff (gold.py:104,113-118; the shipped default, main.py:36);
-  *  - an extra aggregate-null guard: any NULL avg_temp aborts the run
-  *    before the ledger is stamped (gold.py:53-59), a check of the
-  *    [[Layers.step]].
+  *  - an extra aggregate-null guard: a NULL avg_temp fails the run before
+  *    anything is published or stamped (gold.py:53-59). It is a column of
+  *    the batch [[run]] writes, so it fails the write's own task.
   */
 object Gold {
 
@@ -42,12 +42,19 @@ object Gold {
     * Without them a one-row file is about a quarter smaller. */
   private val writeOptions = Map("parquet.column.statistics.enabled" -> "false")
 
+  /** [[transform]] with the NULL guard: a NULL `avg_temp` raises
+    * `gold partition <city>/<date> produced NULL avg_temp` in the task that
+    * writes it. */
+  private def guarded(silver: DataFrame): DataFrame =
+    transform(silver).withColumn("avg_temp", when(col("avg_temp").isNull, raise_error(
+      format_string("gold partition %s/%s produced NULL avg_temp", col("city"), col("date").cast("string"))))
+      .otherwise(col("avg_temp")))
+
   /** Incremental (or `fullRefresh`) run of [[Layers.step]] over the silver
     * partitions; returns the number of partitions aggregated. */
   def run(spark: SparkSession, silverRoot: String, goldRoot: String,
           metadataPath: String, fullRefresh: Boolean = false): Long =
     if (!ParquetLake.exists(spark, silverRoot)) 0L // gold.py:26-28
     else Layers.step(spark, layerName, silverRoot, Schemas.silver, goldRoot, metadataPath,
-      transform, checks = Seq("NULL avg_temp" -> col("avg_temp").isNull),
-      writeOptions = writeOptions, fullRefresh = fullRefresh)
+      guarded, writeOptions = writeOptions, fullRefresh = fullRefresh)
 }

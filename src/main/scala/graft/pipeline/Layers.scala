@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.meta.MetadataLedger
@@ -56,42 +55,28 @@ object Layers {
   /** One incremental run of `layer`: read the source partitions of `srcRoot`
     * pending for it ([[pendingDirs]]), `transform` them as one batch, write
     * the result into `dstRoot` with [[ParquetLake.overwritePartitions]] (with
-    * the writer `writeOptions`), validate, and stamp the pending keys in the
-    * ledger. Returns the number of partitions processed and stamped.
+    * the writer `writeOptions`), and stamp in the ledger the pending keys
+    * whose partitions the publish swapped in. Returns the number of
+    * partitions processed and stamped.
     *
-    * Validation rides the write: one Spark `Observation` on the batch
-    * collects the written (city, date) keys and, per `checks` entry
-    * `(what, bad)`, the number of rows matching `bad`, as the write's own
-    * tasks stream the rows — no cache, no re-scan. A check with a non-zero
-    * count (`<n> <layer> partitions produced <what>`, gold.py:53-59) throws
-    * before anything is stamped. Otherwise the pending partitions that
-    * produced rows are stamped, and a pending partition the transform left
-    * empty (reference silver.py:42-47 / gold.py:46-51) is then named in an
+    * Validation belongs in `transform`, as a column that fails the write's
+    * own task (gold's NULL guard, gold.py:53-59): a failed write publishes
+    * nothing and stamps nothing, the reference's validate-before-write
+    * order. A pending partition the transform left empty (reference
+    * silver.py:42-47 / gold.py:46-51) is named in an
     * [[EmptyPartitionsException]] (`empty partitions after transform: …`)
-    * and stays pending: like the reference's per-partition loop
-    * (silver.py:73-74), one bad partition does not hold back the others.
-    * The trade against the reference's validate-before-write order: a
-    * failed batch has already overwritten its partitions, but what failed is
-    * unstamped, so the rerun after the fix overwrites the same partitions
-    * again — the failure costs a rerun, never correctness. */
+    * once the others are stamped, and stays pending: like the reference's
+    * per-partition loop (silver.py:73-74), one bad partition does not hold
+    * back the others. */
   def step(spark: SparkSession, layer: String, srcRoot: String, srcSchema: StructType,
            dstRoot: String, metadataPath: String, transform: DataFrame => DataFrame,
-           checks: Seq[(String, Column)], writeOptions: Map[String, String],
-           fullRefresh: Boolean): Long = {
+           writeOptions: Map[String, String], fullRefresh: Boolean): Long = {
     val pending = pendingDirs(spark, srcRoot, metadataPath, layer, fullRefresh)
     if (pending.isEmpty) return 0L
-    val keys = pending.map(_.values)
-    val partitionCols = Schemas.partition.fieldNames.toSeq
-    val obs = Observation()
     val batch = transform(ParquetLake.readPartitions(spark, srcRoot, srcSchema, pending))
-      .observe(obs, collect_set(struct(partitionCols.map(col): _*)).as("parts"),
-        checks.map { case (what, bad) => count(when(bad, 1)).as(what) }: _*)
-    ParquetLake.overwritePartitions(batch, dstRoot, partitionCols, writeOptions)
-    val observed = obs.get
-    for ((what, _) <- checks; n = observed(what).asInstanceOf[Long] if n > 0)
-      throw new IllegalStateException(s"$n $layer partitions produced $what")
-    val parts = observed("parts").asInstanceOf[scala.collection.Seq[Row]].toSet
-    val (done, missing) = keys.partition(parts.contains)
+    val written = ParquetLake.overwritePartitions(batch, dstRoot, Schemas.partition.fieldNames.toSeq,
+      writeOptions).toSet
+    val (done, missing) = pending.map(_.values).partition(written.contains)
     MetadataLedger.upsert(spark, metadataPath, layer, done)
     if (missing.nonEmpty) {
       val desc = missing.map(r => s"${r.get(0)}/${r.get(1)}").mkString(", ")

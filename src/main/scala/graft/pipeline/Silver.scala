@@ -39,5 +39,5 @@ object Silver {
           metadataPath: String): Long =
     // a missing bronze root fails the listing: fatal, like the reference
     Layers.step(spark, layerName, bronzeRoot, Schemas.bronze, silverRoot, metadataPath,
-      transform, checks = Nil, writeOptions = Map.empty, fullRefresh = false)
+      transform, writeOptions = Map.empty, fullRefresh = false)
 }

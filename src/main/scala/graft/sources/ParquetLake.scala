@@ -90,7 +90,7 @@ object ParquetLake {
     * `_`-prefixed name without an `=`. Spark's file index skips the same, so
     * a `_p=a` partition directory is kept; it also keeps Parquet summary
     * files, which are not data. */
-  private def hidden(p: Path) = {
+  private[graft] def hidden(p: Path) = {
     val name = p.getName
     (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
   }
@@ -244,9 +244,13 @@ object ParquetLake {
     * crash every leaf is either fully old or fully new (an old leaf caught
     * between the renames is under the aside directory). Both siblings are
     * deleted whether the publish succeeds or fails, except an aside leaf
-    * that could not be put back. */
+    * that could not be put back.
+    *
+    * Returns the partition values of the leaves swapped in, one row per
+    * leaf, cast to `df`'s types as [[catalog]] casts them (null for
+    * `__HIVE_DEFAULT_PARTITION__`); with no `partitionCols`, one empty row. */
   def overwritePartitions(df: DataFrame, root: String, partitionCols: Seq[String],
-                          options: Map[String, String] = Map.empty): Unit = {
+                          options: Map[String, String] = Map.empty): Seq[Row] = {
     val spark = df.sparkSession
     val hfs = fs(spark, root)
     val id = java.util.UUID.randomUUID()
@@ -257,8 +261,7 @@ object ParquetLake {
     try {
       awaitTasksOnFailure(spark, staging)(
         df.write.options(options).partitionBy(partitionCols: _*).parquet(staging.toString))
-      val leaves = partitionDirs(spark, staging.toString,
-        StructType(partitionCols.map(StructField(_, StringType))))
+      val leaves = partitionDirs(spark, staging.toString, StructType(partitionCols.map(df.schema(_))))
       for (leaf <- leaves) {
         val rel = leaf.path.stripPrefix(staging.toString).stripPrefix("/")
         def under(base: Path) = if (rel.isEmpty) base else new Path(base, rel)
@@ -275,6 +278,7 @@ object ParquetLake {
             s"cannot publish $target" + (if (stranded) s"; its previous files are at $old" else ""))
         }
       }
+      leaves.map(_.values)
     } finally {
       hfs.delete(staging, true)
       if (!stranded) hfs.delete(aside, true)

@@ -6,12 +6,6 @@ import org.apache.spark.sql.functions._
 /** Readers for the driver test tables (TESTDATA.md): one parquet per table
   * under a scale-factor directory. */
 final case class Tables(spark: SparkSession, dir: String) {
-  // Engine-canonical runtime confs (idempotent): AQE coalesces post-shuffle
-  // partitions — at bench scale that trims empty-task overhead, at cluster
-  // scale it right-sizes shuffles and splits skewed joins.
-  spark.conf.set("spark.sql.adaptive.enabled", "true")
-  spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-
   // One resolved relation per (session, dir, table), cached for the JVM's
   // lifetime: `spark.read.parquet` runs a schema-inference job (a footer
   // read) at EVERY call, so each query construction paid 1-3 driver jobs

@@ -8,21 +8,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.LocalLakeFileSystem
+import graft.core.GraftSession
 
-/** Shared session for all suites (one JVM-wide session; suites run forked).
-  * It resolves `file:` paths to [[LocalLakeFileSystem]], as
-  * `GraftSession.builder` does. */
+/** Shared session for all suites (one JVM-wide session; suites run forked),
+  * built by [[GraftSession.builder]] as the program's own sessions are. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(LocalLakeFileSystem.sparkConf)
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

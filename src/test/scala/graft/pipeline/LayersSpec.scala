@@ -2,8 +2,8 @@ package graft.pipeline
 
 import java.sql.Date
 import java.time.LocalDate
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 
 import graft.SparkFunSuite
 import graft.meta.MetadataLedger
@@ -88,10 +88,9 @@ class LayersSpec extends SparkFunSuite {
   }
 
   private def silverStep(data: String, meta: String, out: String,
-                         transform: DataFrame => DataFrame,
-                         checks: Seq[(String, Column)] = Nil): Long =
+                         transform: DataFrame => DataFrame): Long =
     Layers.step(spark, Silver.layerName, data, Schemas.bronze, out, meta, transform,
-      checks = checks, writeOptions = Map.empty, fullRefresh = false)
+      writeOptions = Map.empty, fullRefresh = false)
 
   test("step: an emptied pending partition is named in the error") {
     val (data, meta) = lake(Seq(bronzeRow("Delhi", "2026-02-13"),
@@ -109,16 +108,19 @@ class LayersSpec extends SparkFunSuite {
     assert(Layers.pendingDirs(spark, data, meta, Silver.layerName).isEmpty)
   }
 
-  test("step: a failed check is counted off the write and stamps nothing") {
+  test("step: a transform that fails the write publishes nothing and stamps nothing") {
     val (data, meta) = lake(Seq(bronzeRow("Delhi", "2026-02-13", temp = null),
       bronzeRow("London", "2026-02-13"), bronzeRow("London", "2026-02-13", hour = 10, temp = null)),
       done = Nil)
     val out = tmpDir("step") + "/t"
-    val nullTemp = Seq("NULL temperature_2m" -> col("temperature_2m").isNull)
-    val e = intercept[IllegalStateException](silverStep(data, meta, out, identity, nullTemp))
-    assert(e.getMessage.contains("2 silver partitions produced NULL temperature_2m"), e.getMessage)
-    // validation follows the write: the batch is written, but unstamped
-    assert(spark.read.parquet(out).count() == 3)
+    val nullTemp: DataFrame => DataFrame = _.withColumn("temperature_2m",
+      when(col("temperature_2m").isNull, raise_error(lit("NULL temperature_2m")))
+        .otherwise(col("temperature_2m")))
+    val e = intercept[RuntimeException](silverStep(data, meta, out, nullTemp))
+    assert(e.getMessage.contains("NULL temperature_2m"), e.getMessage)
+    // the check fails the write itself: no output, no staging sibling, and
+    // both partitions pending
+    assert(new java.io.File(out).getParentFile.list().isEmpty)
     assert(Layers.pendingDirs(spark, data, meta, Silver.layerName).size == 2)
     assert(silverStep(data, meta, out, identity) == 2, "the rerun processes both partitions")
   }

@@ -172,12 +172,14 @@ class SilverGoldSpec extends SparkFunSuite {
     val root = tmpDir("sgnullavg")
     writeSilver(root, null)
     MetadataLedger.ensure(spark, s"$root/meta")
-    val e = intercept[IllegalStateException] {
+    val e = intercept[RuntimeException] {
       Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta")
     }
-    assert(e.getMessage.contains("1 gold partitions produced NULL avg_temp"))
+    assert(e.getMessage.contains("gold partition Delhi/2026-02-13 produced NULL avg_temp"), e.getMessage)
     assert(MetadataLedger.read(spark, s"$root/meta").isEmpty,
       "a failed guard must not stamp the ledger")
+    assert(new java.io.File(root).list().toSeq.sorted == Seq("meta", "silver"),
+      "a failed guard must publish nothing")
     writeSilver(root, 30.0)
     assert(Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta") == 2,
       "the unstamped partitions are processed on the rerun")
@@ -185,20 +187,26 @@ class SilverGoldSpec extends SparkFunSuite {
       .map(_.getDouble(0)).toSeq == Seq(30.0, 8.0))
   }
 
-  test("gold: observed null-avg guard fires off the write action itself") {
-    val root = tmpDir("sgobs")
-    writeSilver(root, null)
+  test("gold: a failed null-avg guard on a fullRefresh leaves gold and the ledger as they were") {
+    val root = tmpDir("sgguard")
+    writeSilver(root, 30.0)
     MetadataLedger.ensure(spark, s"$root/meta")
-    val e = intercept[IllegalStateException] {
-      Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta")
+    assert(Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta") == 2)
+    def gold = spark.read.parquet(s"$root/gold").orderBy("city").collect().toSeq
+    def goldFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/gold"))
+      .iterator().asScala.map(_.toString).toSeq.sorted
+    val (goldBefore, filesBefore) = (gold, goldFiles)
+    val ledgerBefore = MetadataLedger.read(spark, s"$root/meta").toSet
+    writeSilver(root, null)
+    val e = intercept[RuntimeException] {
+      Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta", fullRefresh = true)
     }
-    assert(e.getMessage.contains("1 gold partitions produced NULL avg_temp"), e.getMessage)
-    // the count was observed as the write streamed the rows: the failed batch
-    // is already on disk, NULL avg included, and only the ledger stamp is withheld
-    val written = spark.read.parquet(s"$root/gold").orderBy("city")
-      .select("city", "avg_temp").collect().toSeq
-    assert(written == Seq(Row("Delhi", null), Row("London", 8.0)))
-    assert(Layers.pendingDirs(spark, s"$root/silver", s"$root/meta", Gold.layerName).size == 2)
+    assert(e.getMessage.contains("gold partition Delhi/2026-02-13 produced NULL avg_temp"), e.getMessage)
+    // the guard fails the write before the publish: the live partitions keep
+    // their rows, nothing is stamped and no staging or aside sibling is left
+    assert(gold == goldBefore && goldFiles == filesBefore)
+    assert(MetadataLedger.read(spark, s"$root/meta").toSet == ledgerBefore)
+    assert(new java.io.File(root).list().toSeq.sorted == Seq("gold", "meta", "silver"))
   }
 
   test("silver+gold: written rows equal the closed-form expected rows") {

@@ -125,7 +125,7 @@ class LakeFileIndexSpec extends SparkFunSuite {
     assert(Layers.pendingDirs(spark, data, meta, Silver.layerName).map(_.values) ==
       Seq(Row("Delhi", Date.valueOf("2026-02-13"))))
     assert(Layers.step(spark, Silver.layerName, data, Schemas.bronze, out, meta, identity,
-      checks = Nil, writeOptions = Map.empty, fullRefresh = false) == 1)
+      writeOptions = Map.empty, fullRefresh = false) == 1)
   }
 
   test("readPartitions has the schema and rows of Spark's basePath read of the same leaves") {

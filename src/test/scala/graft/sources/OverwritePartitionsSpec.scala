@@ -34,10 +34,12 @@ class OverwritePartitionsSpec extends SparkFunSuite {
     for ((key, a, b, c) <- Seq(("city", "a", "b", "c"), ("_p", "a", "b", "c"),
                                ("region", "007", "010", "012"), ("city", null, "b", "c"))) {
       val root = tmpDir("owp") + "/t"
-      def write(rows: (String, String, Int)*): Unit =
+      def write(rows: (String, String, Int)*): Set[Row] =
         ParquetLake.overwritePartitions(table(rows: _*).withColumnRenamed("city", key), root, Seq(key, "date"))
-      write((a, "1", 1), (a, "2", 2), (b, "1", 3))
-      write((a, "2", 20), (a, "2", 21), (c, "1", 30))
+          .toSet
+      // the values of the leaves swapped in, typed as the written columns
+      assert(write((a, "1", 1), (a, "2", 2), (b, "1", 3)) == Set(Row(a, "1"), Row(a, "2"), Row(b, "1")), key)
+      assert(write((a, "2", 20), (a, "2", 21), (c, "1", 30)) == Set(Row(a, "2"), Row(c, "1")), key)
       assert(rows(root, key) == Seq(Row(a, "1", 1), Row(a, "2", 20), Row(a, "2", 21),
         Row(b, "1", 3), Row(c, "1", 30)), key)
       assert(new File(root).list().toSeq.sorted ==
@@ -49,7 +51,7 @@ class OverwritePartitionsSpec extends SparkFunSuite {
   test("depth 0: the root is the one partition, so the whole table is replaced") {
     val root = tmpDir("owp0") + "/t"
     ParquetLake.overwritePartitions(table(("a", "1", 1), ("b", "1", 2)), root, Nil)
-    ParquetLake.overwritePartitions(table(("c", "1", 3)), root, Nil)
+    assert(ParquetLake.overwritePartitions(table(("c", "1", 3)), root, Nil) == Seq(Row()))
     assert(rows(root) == Seq(Row("c", "1", 3)))
     assert(siblings(root) == Nil)
   }
