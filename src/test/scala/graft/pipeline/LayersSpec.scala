@@ -108,7 +108,7 @@ class LayersSpec extends SparkFunSuite {
     assert(Layers.pendingDirs(spark, data, meta, Silver.layerName).isEmpty)
   }
 
-  test("step: a transform that fails the write publishes nothing and stamps nothing") {
+  test("step: a failed check is counted off the write and stamps nothing") {
     val (data, meta) = lake(Seq(bronzeRow("Delhi", "2026-02-13", temp = null),
       bronzeRow("London", "2026-02-13"), bronzeRow("London", "2026-02-13", hour = 10, temp = null)),
       done = Nil)

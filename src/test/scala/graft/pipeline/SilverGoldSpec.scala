@@ -187,6 +187,23 @@ class SilverGoldSpec extends SparkFunSuite {
       .map(_.getDouble(0)).toSeq == Seq(30.0, 8.0))
   }
 
+  test("gold: observed null-avg guard fires off the write action itself") {
+    val root = tmpDir("sgobs")
+    writeSilver(root, null)
+    MetadataLedger.ensure(spark, s"$root/meta")
+    val e = intercept[RuntimeException] {
+      Gold.run(spark, s"$root/silver", s"$root/gold", s"$root/meta")
+    }
+    // the guard is a column of the batch being written: the error is raised by
+    // the task writing Delhi's row, not by a check run after the write
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.getStackTrace.exists(_.getClassName.endsWith(".FileFormatDataWriter"))),
+      chain.flatMap(_.getStackTrace).mkString("\n"))
+    assert(chain.last.getMessage.contains("gold partition Delhi/2026-02-13 produced NULL avg_temp"),
+      chain.last.getMessage)
+    assert(Layers.pendingDirs(spark, s"$root/silver", s"$root/meta", Gold.layerName).size == 2)
+  }
+
   test("gold: a failed null-avg guard on a fullRefresh leaves gold and the ledger as they were") {
     val root = tmpDir("sgguard")
     writeSilver(root, 30.0)
